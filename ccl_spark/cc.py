@@ -18,23 +18,19 @@ Scale notes (local tests are small; the plan is what matters):
   equi-join, both AQE-managed. Skewed hubs are exactly the nodes that
   become roots fastest, so the star rewrite self-heals skew; AQE
   skew-join splitting covers the first rounds.
-- `localCheckpoint(eager=True)` every round truncates the logical plan
-  (iterative self-join lineage otherwise grows unboundedly).
+- Rounds run in the shared superstep loop (superstep.run_supersteps):
+  one eager `localCheckpoint` per round truncates the logical plan
+  (iterative self-join lineage otherwise grows unboundedly) and carries
+  the round's count+xor convergence signature in the same job.
 - With a `SuperstepHarness` the per-round edge set is persisted to
   parquet with lineage rows, so a killed run resumes mid-algorithm.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
-from .superstep import SuperstepHarness
-
-_DEBUG = os.environ.get("CCL_SPARK_DEBUG", "") == "1"
+from .superstep import SuperstepHarness, run_supersteps, signature_columns
 
 
 def _dedup_pairs(df: DataFrame) -> DataFrame:
@@ -100,35 +96,6 @@ def small_star(
     lo = canon.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
     hi = mins.select(F.col("u"), F.col("m").alias("v"))
     return _dedup_pairs(lo.unionByName(hi))
-
-
-def _signature(edges: DataFrame) -> tuple:
-    # count + xor of row hashes: order-independent, overflow-free, exact,
-    # and cheap (decimal sums cost multiple seconds per round at 10^7 rows)
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
-
-
-def _observed_checkpoint(df: DataFrame) -> tuple[DataFrame, tuple]:
-    """Materialize one round's edge set AND collect its convergence
-    signature from the SAME job: the count+xor metrics ride the round
-    job as an Observation (CollectMetrics accumulators in the round's
-    own tasks), so no separate aggregation stage ever scans the
-    checkpointed output (round-4 verdict ask #4 — the fixed per-round
-    cost is what caps strong scaling on small frontiers)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).localCheckpoint(eager=True)
-    m = obs.get  # eager checkpoint already ran the job; metrics are ready
-    return out, (m["n"], m["h"])
 
 
 def _local_contract(pairs: DataFrame) -> DataFrame:
@@ -242,12 +209,8 @@ def connected_components(
     max_iter: int = 60,
     harness: SuperstepHarness | None = None,
     pre_contract: bool = False,
-    rounds_per_check: int = 1,
     broadcast_threshold: int = 10_000,
     local_finish_threshold: int = 4_000_000,
-    late_fuse_threshold: int = 0,
-    late_rounds_per_check: int = 3,
-    observe_signature: bool = True,
 ) -> DataFrame:
     """Return ``(vertex long, component long)``.
 
@@ -259,8 +222,9 @@ def connected_components(
     vertices; endpoints of ``edges`` are always included.
 
     ``harness`` enables parquet checkpoint/resume + lineage metrics
-    (see superstep.SuperstepHarness). Without it, localCheckpoint is
-    used purely to truncate lineage.
+    (see superstep.run_supersteps). Each round is one eager checkpoint
+    whose count+xor signature rides the same job; the fixpoint is the
+    round whose signature equals its input's.
 
     Round-cost controls (the fixpoint is round-latency-bound on small
     frontiers — each materialization pays a fixed scheduling cost):
@@ -274,30 +238,6 @@ def connected_components(
       set is as large as the input and the Arrow pass is pure
       overhead (measured: +20s on 6.8M shuffled edges). Off by
       default for that reason.
-    - ``rounds_per_check``: star rounds fused per materialization /
-      convergence check (an extra fused round at the fixpoint is
-      idempotent, so any value is correct). Measured on this box:
-      fusing LOSES at both 341k and 6.8M edges at FULL frontier (the
-      deeper per-job DAG costs more than the saved signature job), so
-      the default is 1; the knob exists for cluster topologies where
-      per-job scheduling dominates per-stage cost.
-    - ``late_fuse_threshold`` / ``late_rounds_per_check``: adaptive
-      fusion for rounds whose surviving edge set is below the
-      threshold (round-3 verdict ask, tried and MEASURED OFF by
-      default): at 6.8M input edges / 1.98M-pair fixpoint, fusing
-      sub-4M rounds ran 1.9-2.9x SLOWER at both 1x4 and 4x4 executors
-      (47.8s -> 91.7s; 21.3s -> 61.9s) — within a lazily-checkpointed
-      fused block each star round re-references its input ~3x with no
-      materialization between, so the recomputation bound grows ~9^k
-      and swamps the saved per-round fixed cost. The knob remains for
-      genuinely tiny tails (<= broadcast_threshold scale) on
-      schedulers with second-scale job latency; 0 (default) disables.
-    - ``observe_signature`` (default True): collect the per-round
-      convergence signature as Observation accumulators INSIDE the
-      round job (CollectMetrics in the round's own tasks) instead of
-      an aggregation over the checkpointed output — same job count,
-      one fewer scan+reduce per round; the False path keeps the old
-      lazy-checkpoint+agg shape for A/B measurement.
     - ``broadcast_threshold``: once the surviving edge set is smaller
       than this, the per-vertex min table is broadcast (explicit
       BroadcastExchange) so late rounds stop shuffling the frontier.
@@ -335,26 +275,13 @@ def connected_components(
         verts = verts.unionByName(vertices.select(F.col("vertex").cast("long")))
     verts = verts.distinct()
 
-    if pre_contract:
-        pairs = _local_contract(pairs)
+    contracted = _local_contract(pairs) if pre_contract else pairs
 
-    # canonical (hi, lo) starting set — the round-to-round invariant
-    cur = _dedup_pairs(
-        pairs.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-    )
-    start_step = 0
-    if harness is not None:
-        resumed = harness.latest()
-        if resumed is not None:
-            start_step, cur = resumed
-    cur = cur.localCheckpoint(eager=True)
-    sig = _signature(cur)
+    def local_finish(n: int) -> bool:
+        return 0 < n <= local_finish_threshold
 
-    converged = sig[0] == 0
-    for step in range(start_step, max_iter if not converged else 0):
-        with_timer = harness.timer() if harness is not None else None
-        t0 = time.monotonic() if _DEBUG else 0.0
-        if 0 < sig[0] <= local_finish_threshold:
+    def round_plan(cur: DataFrame, _k: int, prev: dict) -> DataFrame:
+        if local_finish(prev["n"]):
             # subcritical finish, two-level: contract in parallel
             # chunks first (each task solves its slice and emits a
             # star forest no larger than its slice), then one merge
@@ -366,73 +293,35 @@ def connected_components(
             # pass-1 reduction factor (~5-10x measured).
             p = min(spark.sparkContext.defaultParallelism, 16)
             merged = _local_contract(cur.coalesce(p)) if p > 1 else cur
-            if observe_signature:
-                nxt, new_sig = _observed_checkpoint(_local_contract(merged.coalesce(1)))
-            else:
-                nxt = _local_contract(merged.coalesce(1)).localCheckpoint(eager=True)
-                new_sig = _signature(nxt)
-            if _DEBUG:
-                print(
-                    f"cc round {step}: local finish {sig[0]} -> {new_sig[0]} edges, "
-                    f"{time.monotonic() - t0:.2f}s",
-                    file=sys.stderr,
-                )
-            cur.unpersist()
-            if harness is not None:
-                harness.record(
-                    superstep=step,
-                    df=nxt,
-                    changed=0,
-                    delta=float(abs(new_sig[0] - sig[0])),
-                    timer=with_timer,
-                )
-            cur, sig = nxt, new_sig
-            converged = True
-            break
-        bcast = sig[0] <= broadcast_threshold
-        k = max(rounds_per_check, 1)
-        if late_fuse_threshold and 0 < sig[0] <= late_fuse_threshold:
-            k = max(k, int(late_rounds_per_check))
-        nxt = cur
-        for _ in range(k):
-            nxt = small_star(
-                large_star(nxt, canonical=True, broadcast_mins=bcast),
-                canonical=True,
-                broadcast_mins=bcast,
-            )
-        if observe_signature:
-            # signature rides the round job as Observation accumulators
-            # — one job per round and NO aggregation stage over the
-            # checkpointed output (_observed_checkpoint)
-            nxt, new_sig = _observed_checkpoint(nxt)
-        else:
-            # lazy checkpoint: the signature aggregation is the action
-            # that materializes it — one job, but the agg re-scans the
-            # just-checkpointed partitions and pays a reduce stage
-            nxt = nxt.localCheckpoint(eager=False)
-            new_sig = _signature(nxt)
-        if _DEBUG:
-            print(
-                f"cc round {step}: {new_sig[0]} edges, bcast={bcast}, "
-                f"{time.monotonic() - t0:.2f}s, parts={nxt.rdd.getNumPartitions()}",
-                file=sys.stderr,
-            )
-        changed = new_sig != sig
-        cur.unpersist()  # superseded round state; nxt is materialized
-        if harness is not None:
-            harness.record(
-                superstep=step,
-                df=nxt,
-                changed=-1 if changed else 0,
-                delta=float(abs(new_sig[0] - sig[0])),
-                timer=with_timer,
-            )
-        cur, sig = nxt, new_sig
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+            return _local_contract(merged.coalesce(1))
+        bcast = prev["n"] <= broadcast_threshold
+        return small_star(
+            large_star(cur, canonical=True, broadcast_mins=bcast),
+            canonical=True,
+            broadcast_mins=bcast,
+        )
+
+    # canonical (hi, lo) starting set — the round-to-round invariant
+    start = _dedup_pairs(
+        contracted.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+    )
+    sig = signature_columns(("u", "v"))
+    cur = run_supersteps(
+        "connected_components",
+        start,
+        round_plan,
+        columns=("u", "v"),
+        max_iter=max_iter,
+        metrics=sig,
+        start_metrics=sig,
+        # a local finish ends at the fixpoint; a star round at an
+        # unchanged edge set
+        stop=lambda m, prev: local_finish(prev["n"])
+        or (m["n"], m["h"]) == (prev["n"], prev["h"]),
+        harness=harness,
+        pin=(pairs, ("u", "v"), ""),
+        exhausted=f"connected_components: no fixpoint in {max_iter} rounds",
+    )
 
     # Fixpoint is a star forest: (child, root). Roots/isolated vertices
     # label themselves.

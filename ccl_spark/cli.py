@@ -37,7 +37,7 @@ def main(argv: list[str] | None = None) -> int:
     from ccl_spark.lpa import label_propagation
     from ccl_spark.pagerank import pagerank
     from ccl_spark.session import get_spark
-    from ccl_spark.superstep import SuperstepHarness
+    from ccl_spark.superstep import SuperstepHarness, fs_exists
     from ccl_spark.triangles import triangles_per_vertex
 
     p = argparse.ArgumentParser(prog="ccl_spark")
@@ -88,7 +88,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         if not args.resume:
             # a fresh run must not silently adopt stale state
-            if harness.latest() is not None:
+            if fs_exists(spark, f"{harness.root}/state"):
                 print(
                     f"checkpoint root {args.checkpoint} has prior state; "
                     "pass --resume to continue it",

@@ -12,9 +12,11 @@ reference never materializes — SURVEY.md §1). Layout per FIXTURES.md:
 - salt = pmod(xxhash64(src), n_salts): pre-computed skew key, so any
   downstream two-phase aggregation over hub vertices can group by
   (src, salt) first and by src second.
-- the table is repartitioned by src so iterative joins against
-  vertex-state tables co-locate; on real storage this is an Iceberg
-  bucket(src) partition spec + sorted-by-src data files.
+- iterative algorithms checkpoint their own edge side once per run
+  and let each materialized job exchange it once (ReusedExchange
+  shares that exchange across fused iterations); on real storage the
+  co-located layout is an Iceberg bucket(src) partition spec +
+  sorted-by-src data files.
 """
 
 from __future__ import annotations
@@ -123,45 +125,6 @@ def page_edges(
 
 def with_salt(edges: DataFrame, n_salts: int = 64) -> DataFrame:
     return edges.withColumn("salt", F.pmod(F.xxhash64("src"), F.lit(n_salts)).cast("int"))
-
-
-def cache_partitioned(df: DataFrame, *keys: str, colocate: bool = False) -> DataFrame:
-    """Pin an iteration-lifetime table (the edge relation of an
-    iterative algorithm) in executor storage, in one of two measured
-    shapes (round-4 finding; call ``.unpersist()`` when done):
-
-    ``colocate=True`` — ``repartition(keys).persist()``: the cached
-    plan keeps its HashPartitioning (partition count pinned to
-    spark.sql.shuffle.partitions), so every equi-join on ``keys``
-    reuses it and exchanges ONLY its other side — zero edge-relation
-    exchanges per iteration (audited by tests/test_plan_audits.py::
-    test_cache_partitioned_join_reuses_partitioning). This is the
-    cluster shape: on a 1000-executor network, re-exchanging a 10^12-
-    edge table every iteration is the dominant cost, and the durable
-    equivalent is a bucketed/cluster-keyed Iceberg table.
-
-    ``colocate=False`` (default) — plain eager ``localCheckpoint()``:
-    a checkpointed RDD reports UnknownPartitioning, so each
-    materialized job re-exchanges the table — but ONCE per job, not
-    once per iteration: Catalyst's ReusedExchange shares the exchange
-    across all fused iterations inside the job, and its output is
-    shuffle files read back cheaply. NOTE ``localCheckpoint`` of a
-    ``repartition(key)`` does NOT keep the partitioning (measured:
-    UnknownPartitioning, both join sides re-exchanged), so no
-    repartition is done here — it would be a wasted shuffle.
-
-    Measured on this single-node/tmpfs sandbox (where a shuffle is a
-    memory copy): checkpoint beats persist at BOTH 340k and 6.8M edges
-    (PageRank to 1e-6: 58s vs 81s; HITS 10 iters: 76s vs 102s) because
-    the persisted table pays columnar cache decode on every one of the
-    fused plan's edge scans while the exchange is paid once per job.
-    On a network-bound cluster the trade reverses, hence the switch."""
-    if colocate:
-        sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        out = df.repartition(sp, *keys).persist()
-        out.count()
-        return out
-    return df.localCheckpoint(eager=True)
 
 
 def url_vertices(pages: DataFrame) -> DataFrame:

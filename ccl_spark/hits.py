@@ -4,63 +4,28 @@ Per iteration: authority(v) = sum of hub over in-neighbors, then
 L2-normalize; hub(u) = sum of authority over out-neighbors, then
 L2-normalize.
 
-Scale shape (round-4 rework, all measured — see edges.cache_partitioned
-for the numbers):
-
-- ``iters_per_check=2`` fuses two full iterations per materialization,
-  so the edge-relation exchanges inside a job are shared by Catalyst's
-  ReusedExchange instead of being paid per iteration (6.8M edges, 10
-  iters: 75s -> 61s; k=3's plan depth erodes the gain back to 71s).
-- ``colocate=True`` switches to TWO cached co-partitioned edge
-  orientations (``e_src`` by src for the authority half-step, ``e_dst``
-  by dst for the hub half-step) so NEITHER join ever exchanges the
-  edge relation — only the |V|-sized state shuffles (plan-audited by
-  tests/test_plan_audits.py::test_hits_iteration_no_edge_exchange).
-  That is the shape for network-bound clusters where an edge exchange
-  dominates; on this single-node sandbox the columnar cache decode
-  costs more than the tmpfs shuffle, so the default is the checkpoint
-  + fused-exchange-reuse shape.
-
+Scale shape: the edge table is checkpointed once for the run, and
+``iters_per_check=2`` fuses two full iterations per materialization,
+so the edge-relation exchanges inside a job are shared by Catalyst's
+ReusedExchange instead of being paid per iteration (6.8M edges, 10
+iters: 75s -> 61s; k=3's plan depth erodes the gain back to 71s).
 Each half-step is one equi-join + one map-side-combined groupBy sum;
 the normalization scalar is a 1-row aggregate broadcast into the plan.
 
+Iterations run in the shared superstep loop (superstep.run_supersteps).
 Fixed-iteration mode (tol=0) replays a deterministic sequence, which
 is what the driver-gate's chained-CTE oracle reproduces (block fusion
 never changes the arithmetic or the iteration count); in that mode no
-delta aggregation runs at all (ADVICE r3) — state is materialized by
-an eager localCheckpoint and the convergence scan is skipped. With
-``tol > 0`` the check runs once per block, so convergence may overshoot
-by up to k-1 iterations — never stop early.
+delta is measured at all — each block is one eager checkpoint. With
+``tol > 0`` the max change over the block rides the same job, so
+convergence may overshoot by up to k-1 iterations — never stop early.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .superstep import SuperstepHarness, edge_signature, pin_input_signature
-
-
-def _prepare(edges: DataFrame, src: str, dst: str, colocate: bool = False):
-    """Vertex set + the edge table(s): two cached co-partitioned
-    orientations when colocating, one shared checkpoint otherwise
-    (duplicating the bytes buys nothing without pinned partitioning)."""
-    from .edges import cache_partitioned
-
-    pairs = edges.select(
-        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
-    ).distinct()
-    verts = (
-        pairs.select(F.col("src").alias("vertex"))
-        .unionByName(pairs.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if colocate:
-        e_src = cache_partitioned(pairs, "src", colocate=True)
-        e_dst = cache_partitioned(pairs, "dst", colocate=True)
-    else:
-        e_src = e_dst = cache_partitioned(pairs, "src")
-    return verts, e_src, e_dst
+from .superstep import SuperstepHarness, run_supersteps
 
 
 def _normalized(scores: DataFrame, col: str) -> DataFrame:
@@ -73,47 +38,21 @@ def _normalized(scores: DataFrame, col: str) -> DataFrame:
     )
 
 
-def _msgs_auth(e_src: DataFrame, state: DataFrame) -> DataFrame:
-    """The authority half-step's edge x state join — with colocated
-    orientations, e_src's cached HashPartitioning(src) is reused and
-    only state shuffles (plan-audited)."""
-    return e_src.join(state.select(F.col("vertex").alias("src"), "hub"), "src")
-
-
-def _msgs_hub(e_dst: DataFrame, auth: DataFrame) -> DataFrame:
-    """The hub half-step's edge x authority join — with colocated
-    orientations, e_dst's cached HashPartitioning(dst) is reused and
-    only auth shuffles (plan-audited)."""
-    return e_dst.join(auth.select(F.col("vertex").alias("dst"), "authority"), "dst")
-
-
-def _auth_step(e_src: DataFrame, state: DataFrame, verts: DataFrame) -> DataFrame:
-    """authority = normalized sum of hub over in-neighbors."""
-    a_raw = (
-        _msgs_auth(e_src, state)
-        .groupBy(F.col("dst").alias("vertex"))
-        .agg(F.sum("hub").alias("authority"))
+def _half_step(
+    e: DataFrame, scores: DataFrame, verts: DataFrame, key: str, to: str, col: str, out: str
+) -> DataFrame:
+    """``out`` = normalized sum of ``col`` carried from each edge's
+    ``key`` endpoint to its ``to`` endpoint."""
+    raw = (
+        e.join(scores.select(F.col("vertex").alias(key), col), key)
+        .groupBy(F.col(to).alias("vertex"))
+        .agg(F.sum(col).alias(out))
     )
     return _normalized(
-        verts.join(a_raw, "vertex", "left").select(
-            "vertex", F.coalesce("authority", F.lit(0.0)).alias("authority")
+        verts.join(raw, "vertex", "left").select(
+            "vertex", F.coalesce(out, F.lit(0.0)).alias(out)
         ),
-        "authority",
-    )
-
-
-def _hub_step(e_dst: DataFrame, auth: DataFrame, verts: DataFrame) -> DataFrame:
-    """hub = normalized sum of authority over out-neighbors."""
-    h_raw = (
-        _msgs_hub(e_dst, auth)
-        .groupBy(F.col("src").alias("vertex"))
-        .agg(F.sum("authority").alias("hub"))
-    )
-    return _normalized(
-        verts.join(h_raw, "vertex", "left").select(
-            "vertex", F.coalesce("hub", F.lit(0.0)).alias("hub")
-        ),
-        "hub",
+        out,
     )
 
 
@@ -124,7 +63,6 @@ def hits(
     max_iter: int = 20,
     tol: float = 0.0,
     iters_per_check: int = 2,
-    colocate: bool = False,
     harness: SuperstepHarness | None = None,
 ) -> DataFrame:
     """Return ``(vertex long, hub double, authority double)``, both
@@ -132,95 +70,56 @@ def hits(
     per-vertex change of both scores drops below it (checked once per
     fused block). ``harness`` checkpoints per-block state + lineage and
     resumes mid-algorithm (the deterministic iteration sequence makes a
-    resumed run equal an uninterrupted one — same contract as
-    cc/pagerank/lpa)."""
-    verts, e_src, e_dst = _prepare(edges, src, dst, colocate=colocate)
+    resumed run equal an uninterrupted one). Only the edge set is
+    pinned: ``iters_per_check`` never changes the iterate sequence,
+    and ``tol`` only decides when to stop."""
+    e = (
+        edges.select(
+            F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    verts = (
+        e.select(F.col("src").alias("vertex"))
+        .unionByName(e.select(F.col("dst").alias("vertex")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
+    def iterations(s: DataFrame, k: int, _prev: dict) -> DataFrame:
+        out = s
+        for _ in range(k):
+            auth = _half_step(e, out, verts, "src", "dst", "hub", "authority")
+            hub = _half_step(e, auth, verts, "dst", "src", "authority", "hub")
+            out = out.select("vertex").join(hub, "vertex").join(auth, "vertex")
+        if tol > 0:
+            out = s.select(
+                "vertex",
+                F.col("hub").alias("old_hub"),
+                F.col("authority").alias("old_authority"),
+            ).join(out, "vertex")
+        return out
+
+    delta = F.max(
+        F.greatest(
+            F.abs(F.col("hub") - F.col("old_hub")),
+            F.abs(F.col("authority") - F.col("old_authority")),
+        )
+    ).alias("delta")
     # init all-ones; the in-iteration normalization makes the sequence
     # of NORMALIZED scores independent of the initial scaling
-    state = verts.select(
-        "vertex", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
-    ).localCheckpoint(eager=True)
-    it = 0
-    if harness is not None:
-        resumed = harness.latest()
-        # resuming a checkpoint against a different edge table would
-        # silently continue iterating the wrong graph (ADVICE r4) —
-        # pin the same order-free edge signature pagerank uses. Only
-        # the edge set is pinned: iters_per_check/colocate never change
-        # the iterate sequence, and tol only decides when to stop.
-        pin_input_signature(
-            harness,
-            resumed,
-            edge_signature(
-                edges.select(
-                    F.col(src).cast("long").alias("src"),
-                    F.col(dst).cast("long").alias("dst"),
-                ).distinct(),
-                "src",
-                "dst",
-            ),
-            "",
-            "hits",
-        )
-        if resumed is not None:
-            it = resumed[0]
-            state = resumed[1].select("vertex", "hub", "authority")
-    k = max(int(iters_per_check), 1)
-    while it < max_iter:
-        t0 = harness.timer() if harness is not None else None
-        kk = min(k, max_iter - it)
-        s = state
-        for _ in range(kk):
-            auth = _auth_step(e_src, s, verts)
-            hub = _hub_step(e_dst, auth, verts)
-            s = _join2(s.select("vertex"), hub, auth)
-        if tol > 0:
-            nxt = (
-                state.select(
-                    "vertex",
-                    F.col("hub").alias("old_hub"),
-                    F.col("authority").alias("old_authority"),
-                )
-                .join(s, "vertex")
-                .localCheckpoint(eager=False)
-            )
-            delta = nxt.agg(
-                F.max(
-                    F.greatest(
-                        F.abs(F.col("hub") - F.col("old_hub")),
-                        F.abs(F.col("authority") - F.col("old_authority")),
-                    )
-                )
-            ).first()[0]
-            state = nxt.select("vertex", "hub", "authority")
-            it += kk
-            if harness is not None:
-                harness.record(
-                    superstep=it - 1, df=state, changed=-1,
-                    delta=float(delta) if delta is not None else 0.0, timer=t0,
-                )
-            if delta is not None and delta < tol:
-                break
-        else:
-            # fixed-iteration mode: no discarded delta aggregation
-            # (ADVICE r3) — the eager checkpoint is the materializer
-            state = s.localCheckpoint(eager=True)
-            it += kk
-            if harness is not None:
-                harness.record(
-                    superstep=it - 1, df=state, changed=-1, delta=0.0, timer=t0
-                )
-    e_src.unpersist()
-    if e_dst is not e_src:
-        e_dst.unpersist()
-    return state
-
-
-def _join2(base: DataFrame, hub: DataFrame, auth: DataFrame) -> DataFrame:
-    keep = [c for c in base.columns if c not in ("vertex", "hub", "authority")]
-    return (
-        base.join(hub, "vertex").join(auth, "vertex").select("vertex", *keep, "hub", "authority")
+    return run_supersteps(
+        "hits",
+        verts.select("vertex", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")),
+        iterations,
+        columns=("vertex", "hub", "authority"),
+        max_iter=max_iter,
+        per_block=max(int(iters_per_check), 1),
+        metrics=[delta] if tol > 0 else [],
+        stop=lambda m, _prev: tol > 0 and m["delta"] is not None and m["delta"] < tol,
+        harness=harness,
+        pin=(e, ("src", "dst"), ""),
     )
 
 

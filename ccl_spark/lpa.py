@@ -9,85 +9,32 @@ sequential numbering forced is kept here by construction.
 Per superstep: one join (labels onto the undirected neighbor table) +
 one (u, label) count aggregation + one per-vertex min_by argmax — all
 JVM-side hash aggregates with map-side partials, no sort. The
-neighbor table is pinned once for the run via edges.cache_partitioned
-(default: checkpoint, with the per-job exchange shared across the
-fused rounds by ReusedExchange; ``colocate=True``: cached
-HashPartitioning on the JOIN key ``v`` so rounds never exchange the
-neighbor table — the network-bound-cluster shape; see
-cache_partitioned for the measurements behind the default).
+neighbor table is checkpointed once for the run; each materialized
+block re-exchanges it once, shared across the block's fused rounds by
+ReusedExchange. Rounds run in the shared superstep loop
+(superstep.run_supersteps): one eager checkpoint per block, with the
+changed-label count observed in the same job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from .superstep import SuperstepHarness, edge_signature, pin_input_signature
+from .superstep import SuperstepHarness, run_supersteps
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 10,
-    vertices: DataFrame | None = None,
-    rounds_per_check: int = 2,
-    colocate: bool = False,
-    harness: SuperstepHarness | None = None,
-) -> DataFrame:
-    """Return ``(vertex long, label long)`` after at most ``max_iter``
-    synchronous rounds (stops early when no label changes).
+def _rounds(nbrs: DataFrame, score: Column):
+    """Block plan of k synchronous rounds over the neighbor table
+    ``(u, v[, w])``: every vertex adopts the label of its neighbors
+    with the highest ``score`` aggregate (ties: smallest label)."""
 
-    ``rounds_per_check`` fuses k rounds into one lazy plan per
-    materialization + changed-count check (blocks always sum to
-    ``max_iter``, and stopping is only ever delayed past a fixpoint,
-    where extra rounds are identity). Default 2: measured best at BOTH
-    341k edges (5.4s vs 6.1s at k=3) and 6.8M edges (25.0s vs 28.8s) —
-    each fused round re-references the labels via join+window, so k=3's
-    recompute depth already costs more than the saved check job."""
-    pairs = edges.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    )
-    from .edges import cache_partitioned
-
-    nbrs = cache_partitioned(
-        pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        "v",
-        colocate=colocate,
-    )
-    verts = pairs.select(F.col("u").alias("vertex")).unionByName(
-        pairs.select(F.col("v").alias("vertex"))
-    )
-    if vertices is not None:
-        verts = verts.unionByName(vertices.select(F.col("vertex").cast("long")))
-    verts = verts.distinct().localCheckpoint(eager=True)
-
-    labels = verts.select("vertex", F.col("vertex").alias("label"))
-    start = 0
-    if harness is not None:
-        resumed = harness.latest()
-        # same edge-signature pin as pagerank/hits resume (ADVICE r4):
-        # a mismatched edge table must raise, not silently continue.
-        # rounds_per_check never changes the synchronous label
-        # sequence, so only the edge set is pinned.
-        pin_input_signature(
-            harness, resumed, edge_signature(pairs, "u", "v"), "", "lpa"
-        )
-        if resumed is not None:
-            # synchronous rounds are deterministic, so resuming from
-            # round t replays the identical label sequence a full run
-            # produces (same contract as cc/pagerank resume)
-            start, labels = resumed[0], resumed[1].select("vertex", "label")
-    k = max(int(rounds_per_check), 1)
-    it = start
-    while it < max_iter:
-        t0 = harness.timer() if harness is not None else None
-        kk = min(k, max_iter - it)
-        cur = labels
-        for _ in range(kk):
-            msgs = nbrs.join(cur, nbrs.v == cur.vertex).select("u", "label")
-            counts = msgs.groupBy("u", "label").agg(F.count(F.lit(1)).alias("cnt"))
+    def rounds(cur: DataFrame, k: int, _prev: dict) -> DataFrame:
+        for _ in range(k):
+            counts = (
+                nbrs.join(cur, nbrs.v == cur.vertex)
+                .groupBy("u", "label")
+                .agg(score.alias("cnt"))
+            )
             # argmax by (cnt DESC, label ASC) as a hash aggregate with
             # map-side partials instead of a row_number window — same
             # deterministic winner, no per-round sort (negating cnt, not
@@ -102,22 +49,72 @@ def label_propagation(
                 F.coalesce("new_label", "label").alias("label"),
                 (F.coalesce("new_label", "label") != F.col("label")).alias("chg"),
             )
-        # lazy checkpoint: the changed-count aggregation is the action
-        # that materializes it — one job per fused block instead of two
-        # (same pattern as cc._signature)
-        nxt = cur.localCheckpoint(eager=False)
-        changed = nxt.filter("chg").count()
-        labels = nxt.select("vertex", "label")
-        it += kk
-        if harness is not None:
-            harness.record(
-                superstep=it - 1, df=labels, changed=changed,
-                delta=float(changed), timer=t0,
-            )
-        if changed == 0:
-            break
-    nbrs.unpersist()
-    return labels
+        return cur
+
+    return rounds
+
+
+def _until_no_change() -> dict:
+    """Loop settings both variants share: labels in, labels out, stop
+    at the first block that changes no label."""
+    return dict(
+        columns=("vertex", "label"),
+        metrics=[F.count(F.when(F.col("chg"), 1)).alias("changed")],
+        stop=lambda m, _prev: m["changed"] == 0,
+    )
+
+
+def label_propagation(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_iter: int = 10,
+    vertices: DataFrame | None = None,
+    rounds_per_check: int = 2,
+    harness: SuperstepHarness | None = None,
+) -> DataFrame:
+    """Return ``(vertex long, label long)`` after at most ``max_iter``
+    synchronous rounds (stops early when no label changes).
+
+    ``rounds_per_check`` fuses k rounds into one lazy plan per
+    materialization + changed-count check (blocks always sum to
+    ``max_iter``, and stopping is only ever delayed past a fixpoint,
+    where extra rounds are identity). Default 2: measured best at BOTH
+    341k edges (5.4s vs 6.1s at k=3) and 6.8M edges (25.0s vs 28.8s) —
+    each fused round re-references the labels via join+window, so k=3's
+    recompute depth already costs more than the saved check job.
+
+    ``harness`` checkpoints the labels and resumes mid-algorithm:
+    synchronous rounds are deterministic, so resuming from round t
+    replays the identical label sequence a full run produces. Only the
+    edge set is pinned — ``rounds_per_check`` never changes the
+    sequence."""
+    pairs = edges.select(
+        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+    )
+    nbrs = (
+        pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    verts = pairs.select(F.col("u").alias("vertex")).unionByName(
+        pairs.select(F.col("v").alias("vertex"))
+    )
+    if vertices is not None:
+        verts = verts.unionByName(vertices.select(F.col("vertex").cast("long")))
+    verts = verts.distinct().localCheckpoint(eager=True)
+
+    return run_supersteps(
+        "lpa",
+        verts.select("vertex", F.col("vertex").alias("label")),
+        _rounds(nbrs, F.count(F.lit(1))),
+        per_block=max(int(rounds_per_check), 1),
+        max_iter=max_iter,
+        harness=harness,
+        pin=(pairs, ("u", "v"), ""),
+        **_until_no_change(),
+    )
 
 
 def label_spreading(
@@ -184,7 +181,6 @@ def weighted_label_propagation(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 5,
-    colocate: bool = False,
 ) -> DataFrame:
     """Synchronous WEIGHTED label propagation: each round a vertex
     adopts the label with the largest summed incident edge weight
@@ -202,8 +198,6 @@ def weighted_label_propagation(
     (further rounds are identity, so a fixed-iteration oracle
     agrees).
     """
-    from .edges import cache_partitioned
-
     pairs = edges.select(
         F.col(src).cast("long").alias("u"),
         F.col(dst).cast("long").alias("v"),
@@ -219,29 +213,17 @@ def weighted_label_propagation(
         .groupBy("u", "v")
         .agg(F.sum("w").alias("w"))
     )
-    nbrs = cache_partitioned(sym, "v", colocate=colocate)
+    nbrs = sym.localCheckpoint(eager=True)
     verts = (
         pairs.select(F.col("u").alias("vertex"))
         .unionByName(pairs.select(F.col("v").alias("vertex")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = verts.select("vertex", F.col("vertex").alias("label"))
-    for _ in range(max_iter):
-        msgs = nbrs.join(labels, nbrs.v == labels.vertex).select("u", "label", "w")
-        counts = msgs.groupBy("u", "label").agg(F.sum("w").alias("cnt"))
-        best = counts.groupBy(F.col("u").alias("vertex")).agg(
-            F.min_by("label", F.struct((-F.col("cnt")).alias("nc"), "label"))
-            .alias("new_label")
-        )
-        nxt = labels.join(best, "vertex", "left").select(
-            "vertex",
-            F.coalesce("new_label", "label").alias("label"),
-            (F.coalesce("new_label", "label") != F.col("label")).alias("chg"),
-        ).localCheckpoint(eager=False)
-        changed = nxt.filter("chg").count()
-        labels = nxt.select("vertex", "label")
-        if changed == 0:
-            break
-    nbrs.unpersist()
-    return labels
+    return run_supersteps(
+        "weighted_lpa",
+        verts.select("vertex", F.col("vertex").alias("label")),
+        _rounds(nbrs, F.sum("w")),
+        max_iter=max_iter,
+        **_until_no_change(),
+    )

@@ -35,8 +35,6 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .edges import cache_partitioned
-
 
 def _pairs(edges: DataFrame, src: str, dst: str, undirected: bool) -> DataFrame:
     e = edges.select(
@@ -86,7 +84,7 @@ def neighborhood_function(
         "vertex",
         (F.row_number().over(Window.orderBy("vertex")) - 1).alias("sidx"),
     )
-    e = cache_partitioned(e, "src")
+    e = e.localCheckpoint(eager=True)
     state = sidx.select(
         "vertex",
         (F.col("sidx") / 64).cast("int").alias("wi"),
@@ -178,7 +176,7 @@ def hyperball(
         F.pmod(h, F.lit(m)).cast("int").alias("reg"),
         _rho_expr(f"shiftrightunsigned(xxhash64(vertex), {b})", b).alias("rho"),
     ).localCheckpoint(eager=True)
-    e = cache_partitioned(e, "src")
+    e = e.localCheckpoint(eager=True)
 
     def estimate(df: DataFrame) -> float:
         # Z = sum over ALL m registers of 2^-rho; absent rows are 0.

@@ -6,17 +6,18 @@ every step. Convergence: max per-vertex |delta| < tol (north rule:
 per-vertex scores allclose 1e-6 at convergence).
 
 Scale design:
-- The edge side is joined with out-degrees ONCE, repartitioned by src
-  and cached — `HashPartitioning(src)` survives the cache, so every
-  iteration's edges-by-ranks join reshuffles only the small ranks table
-  (|V| rows), never the 100 TB edge table.
+- The edge side is joined with out-degrees ONCE and checkpointed; each
+  fused block re-exchanges it once, shared across the block's
+  iterations by ReusedExchange.
 - Per-iteration work is one equi-join + one groupBy(dst).sum — both
   whole-stage-codegen hash aggregates with map-side partial sums, so a
   hub with 10^6 in-links is combined map-side before the shuffle; AQE
   skew-join handles residual skew.
-- Ranks are localCheckpoint'ed each iteration (lineage truncation);
-  with a SuperstepHarness they persist to parquet + lineage rows for
-  mid-algorithm resume.
+- Iterations run in the shared superstep loop
+  (superstep.run_supersteps): each block of fused iterations is one
+  eager checkpoint that carries the max-delta convergence metric in
+  the same job; with a SuperstepHarness the ranks persist to parquet +
+  lineage rows for mid-algorithm resume.
 
 The reference has no PageRank; this generalizes its per-component
 bookkeeping to per-vertex scores per the driver north_star.
@@ -26,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .superstep import SuperstepHarness
+from .superstep import SuperstepHarness, run_supersteps
 
 
 def pagerank(
@@ -40,9 +41,6 @@ def pagerank(
     harness: SuperstepHarness | None = None,
     iters_per_check: int = 3,
     seeds: list[int] | None = None,
-    colocate: bool = False,
-    frontier: bool = False,
-    frontier_theta: float = 0.1,
     warm_start: DataFrame | None = None,
     weight: str | None = None,
 ) -> DataFrame:
@@ -76,22 +74,6 @@ def pagerank(
     arithmetically untouched (bit-identical to the fixed-iteration
     oracle sequence).
 
-    ``frontier`` (tol > 0 only) switches to residual-push delta
-    propagation (_frontier_loop): the contribution sum is maintained
-    incrementally and each iteration joins the edge table only against
-    sources whose accumulated change exceeds ``frontier_theta * tol``,
-    with convergence declared ONLY after an exact-refresh iteration
-    passes the same successive-delta test — so the answer meets the
-    identical tolerance contract (parity-tested to ~1e-8). Measured
-    honestly (round 4): it LOSES on this corpus — 22.5s vs 17.2s at
-    341k edges, worse at 6.8M — because global-PageRank deltas decay
-    uniformly (the frontier only empties in the final iterations, and
-    the deferred-residual waves slow the measured convergence), and
-    the iteration count to 1e-6 is already small (~16) since ranks are
-    ~1/n-scale. Kept non-default as the shape for workloads where
-    change IS localized (incremental rank maintenance on a slowly
-    mutating graph).
-
     ``warm_start`` (columns ``vertex, rank``) is INCREMENTAL RANK
     MAINTENANCE (verdict r4 #6): initialize from previously-converged
     ranks — typically of the graph before an edge batch was folded in
@@ -101,12 +83,10 @@ def pagerank(
     equals the from-scratch answer within the tolerance contract
     (parity-tested to 1e-6); the win is iteration COUNT — the warm
     iterate starts ~||delta|| from the fixpoint instead of ~1 away.
-    Compose with ``frontier=True`` for the localized-change case the
-    residual push was built for: the post-warm-start frontier is only
-    the region the edge batch perturbed. Requires ``tol > 0`` (a
-    fixed-iteration warm sequence has no oracle twin) and no harness
-    (fold-ins are few-iteration jobs; resume pinning would have to pin
-    the warm ranks themselves).
+    Requires ``tol > 0`` (a fixed-iteration warm sequence has no
+    oracle twin) and no harness (fold-ins are few-iteration jobs;
+    resume pinning would have to pin the warm ranks themselves).
+
     ``weight`` names a positive edge-weight column and switches to
     WEIGHTED PageRank: a vertex's rank splits over its out-edges
     proportionally to weight (contrib = rank * w / sum-of-out-weights)
@@ -116,17 +96,19 @@ def pagerank(
     the contraction kept. Parallel (src, dst) rows are pre-summed, so
     an uncontracted multigraph works too. Weights must be positive;
     a vertex whose out-weights sum to 0 is treated as dangling.
+
+    ``harness`` checkpoints the rank state and resumes mid-algorithm
+    (superstep.run_supersteps); the input edge set and the recurrence
+    parameters (damping, seed set) are pinned, so resuming against a
+    different graph or recurrence raises. ``tol`` is deliberately NOT
+    pinned: it only decides when to stop, so resuming to a tighter
+    tolerance is a legitimate continuation of the same recurrence.
     """
     if weight is None:
         pairs = edges.select(
             F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
         ).distinct()
     else:
-        if frontier:
-            raise ValueError(
-                "pagerank: frontier mode does not support weighted edges "
-                "(the residual push maintains unweighted contribution sums)"
-            )
         pairs = (
             edges.select(
                 F.col(src).cast("long").alias("src"),
@@ -150,77 +132,11 @@ def pagerank(
         out_deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     else:
         out_deg = pairs.groupBy("src").agg(F.sum("w").alias("deg"))
-    start = 0
-    resumed = harness.latest() if harness is not None else None
-    if resumed is not None:
-        start = resumed[0]
-    # the weighted edge table is pinned once for the iteration's
-    # lifetime; see edges.cache_partitioned for the two measured
-    # shapes (default: checkpoint + per-job ReusedExchange across the
-    # fused iterations; colocate=True: cached HashPartitioning(src) so
-    # the per-iteration join never exchanges the edge relation — the
-    # network-bound-cluster shape). With a harness the table ALSO goes
-    # to DURABLE storage (parquet; Iceberg at scale) — at 100 TB the
-    # edge table must not be pinned in executor storage, and a resumed
-    # run must find it again.
-    edges_w = pairs.join(out_deg, "src")
-    if harness is not None:
-        from .superstep import fs_exists
-
-        epath = f"{harness.root}/edges_w"
-        spath = f"{harness.root}/edges_w_sig"
-        # order-free exact signature of the INPUT edge set, plus the
-        # recurrence parameters (damping, seed set); stored next to
-        # edges_w so a resume detects a mismatched edge table OR a
-        # mismatched recurrence (resuming a uniform checkpoint with
-        # seeds now supplied — or different damping — would silently
-        # continue a DIFFERENT power iteration mid-stream, ADVICE r3).
-        # ``tol`` is deliberately NOT pinned: it only decides when to
-        # stop, so resuming to a tighter tolerance is a legitimate
-        # continuation of the same recurrence.
-        sig_cols = ["src", "dst"] if weight is None else ["src", "dst", "w"]
-        r = pairs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64(*sig_cols)), F.lit(0)).alias("h"),
-        ).first()
-        in_sig = (r["n"], r["h"])
-        seeds_str = "" if seeds is None else ",".join(str(int(s)) for s in seeds)
-        if resumed is not None and fs_exists(harness.spark, f"{spath}/_SUCCESS"):
-            s = harness.spark.read.parquet(spath).first()
-            if (s["n"], s["h"]) != in_sig:
-                raise ValueError(
-                    "pagerank resume: the edges argument does not match the "
-                    f"edge table this checkpoint was built from ({harness.root}); "
-                    "clear the harness root (or use a new one) to start fresh"
-                )
-            stored = (
-                (s["damping"], s["seeds"])
-                if "damping" in s.asDict()
-                else None  # signature from a pre-params run: parameters unknown
-            )
-            if stored != (float(damping), seeds_str):
-                raise ValueError(
-                    "pagerank resume: damping/seeds do not match the run this "
-                    f"checkpoint was built from ({harness.root}: stored={stored}, "
-                    f"requested=({float(damping)}, {seeds_str!r})); clear the "
-                    "harness root (or use a new one) to start fresh"
-                )
-        # rebuild when missing OR incomplete: a resume from a state
-        # checkpoint written by a run that never persisted edges_w
-        # (or a partial write) must not fail at read (ADVICE r2)
-        if resumed is None or not fs_exists(harness.spark, f"{epath}/_SUCCESS"):
-            edges_w.write.mode("overwrite").parquet(epath)
-            harness.spark.createDataFrame(
-                [(in_sig[0], in_sig[1], float(damping), seeds_str)],
-                "n long, h long, damping double, seeds string",
-            ).write.mode("overwrite").parquet(spath)
-        edges_w = harness.spark.read.parquet(epath)
-    from .edges import cache_partitioned
-
-    edges_w = cache_partitioned(edges_w, "src", colocate=colocate)
-    # iteration state carries deg so delta + next-dangling come from ONE
-    # aggregation job per iteration (driver round-trips are the fixed
-    # cost that caps strong scaling on small inputs)
+    # the edge side is joined with out-degrees once and checkpointed for
+    # the iteration's lifetime; a checkpoint reports UnknownPartitioning,
+    # so each block re-exchanges it ONCE, shared across the block's fused
+    # iterations by ReusedExchange
+    edges_w = pairs.join(out_deg, "src").localCheckpoint(eager=True)
     # teleport column: uniform 1/n, or 1/|seeds| on the seed set
     if seeds is not None:
         if not seeds:
@@ -231,6 +147,9 @@ def pagerank(
         ).otherwise(F.lit(0.0))
     else:
         tele = F.lit(1.0 / n)
+    # iteration state carries deg so delta + next-dangling come from the
+    # block's own job (driver round-trips are the fixed cost that caps
+    # strong scaling on small inputs)
     state = (
         verts.join(out_deg, verts.vertex == out_deg.src, "left")
         .select(
@@ -265,31 +184,17 @@ def pagerank(
         if not tot or tot <= 0:
             raise ValueError("pagerank: warm_start ranks sum to zero")
         state = state.withColumn("rank", F.col("rank") / F.lit(float(tot)))
-    if resumed is not None:
-        state = resumed[1]
-        if "tele" not in state.columns:  # checkpoint from a pre-seeds run
-            state = state.withColumn("tele", tele)
     state = state.localCheckpoint(eager=True)
 
     base = (1.0 - damping) / n
-    k = min(max(int(iters_per_check), 1), 6)  # see docstring: plan growth ~3^k
-    if frontier and tol > 0:
-        if harness is not None:
-            raise ValueError(
-                "pagerank: frontier mode does not support harness "
-                "checkpoint/resume (its state carries residuals a resumed "
-                "plain run would misread); run with frontier=False"
-            )
-        return _frontier_loop(
-            edges_w, state, n, damping, tol, max_iter, seeds,
-            theta=frontier_theta * tol, k=min(k, 3),
-        )
-    it = start
-    while it < max_iter:
-        t0 = harness.timer() if harness is not None else None
-        kk = min(k, max_iter - it)
-        s = state
-        for _ in range(kk):
+    per_edge = (
+        (F.col("rank") / F.col("deg"))
+        if weight is None
+        else (F.col("rank") * F.col("w") / F.col("deg"))
+    )
+
+    def iterations(s: DataFrame, k: int, _prev: dict) -> DataFrame:
+        for _ in range(k):
             # dangling mass in-plan: 1-row aggregate broadcast into the
             # update expression — no driver round-trip per iteration.
             # Uniform mode divides by n once in the aggregate (keeps the
@@ -308,11 +213,6 @@ def pagerank(
                 new_rank = F.lit(1.0 - damping) * F.col("tele") + F.lit(damping) * (
                     F.coalesce("contrib", F.lit(0.0)) + F.col("dn") * F.col("tele")
                 )
-            per_edge = (
-                (F.col("rank") / F.col("deg"))
-                if weight is None
-                else (F.col("rank") * F.col("w") / F.col("deg"))
-            )
             contribs = (
                 edges_w.join(s.select("vertex", "rank"), edges_w.src == F.col("vertex"))
                 .select("dst", per_edge.alias("c"))
@@ -330,185 +230,26 @@ def pagerank(
                     new_rank.alias("rank"),
                 )
             )
-        new_state = s.localCheckpoint(eager=False)
-        delta = new_state.agg(F.max(F.abs(F.col("rank") - F.col("old")))).first()[0]
-        state = new_state.select("vertex", "deg", "tele", "rank")
-        it += kk
-        if harness is not None:
-            harness.record(
-                superstep=it - 1, df=state, changed=-1, delta=float(delta), timer=t0
-            )
-        if tol > 0 and delta < tol:
-            edges_w.unpersist()
-            return state.select("vertex", "rank")
-    if tol == 0:
-        edges_w.unpersist()
-        return state.select("vertex", "rank")
-    raise RuntimeError(f"pagerank: no convergence to {tol} in {max_iter} iterations")
+        return s
 
-
-def _dang_and_update(s: DataFrame, n: int, damping: float, seeds):
-    """(dangling 1-row aggregate, new-rank expression) — shared by the
-    plain and frontier loops; uniform mode divides the dangling sum by
-    n inside the aggregate to keep the original arithmetic."""
-    dang_sum = F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0)))
-    if seeds is None:
-        dang = s.agg((dang_sum / F.lit(float(n))).alias("dn"))
-        new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-            F.col("contrib") + F.col("dn")
-        )
-    else:
-        dang = s.agg(dang_sum.alias("dn"))
-        new_rank = F.lit(1.0 - damping) * F.col("tele") + F.lit(damping) * (
-            F.col("contrib") + F.col("dn") * F.col("tele")
-        )
-    return dang, new_rank
-
-
-def _frontier_loop(
-    edges_w: DataFrame,
-    state0: DataFrame,
-    n: int,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    seeds,
-    theta: float,
-    k: int,
-) -> DataFrame:
-    """Residual-push ("frontier") power iteration: maintain the full
-    contribution sum ``contrib = P^T r`` incrementally and, each
-    iteration, join the edge table only against sources whose
-    ACCUMULATED rank change exceeds ``theta`` — late iterations touch
-    a shrinking frontier of edges instead of all of them (Gauss-Seidel
-    -flavored delta propagation; same idea as incremental/push PageRank
-    in the literature).
-
-    Correctness contract: residuals are never dropped — a source below
-    theta keeps accumulating until it crosses it — and convergence is
-    only DECLARED after an EXACT refresh: when the incremental deltas
-    fall below tol, contrib is recomputed from scratch and one full
-    iteration runs; its true successive delta must itself be < tol
-    (the same stopping criterion as the plain loop), else iteration
-    continues from the refreshed exact state. So theta only shapes
-    wall time, never the answer's tolerance."""
-    # initial exact contribution sum (one full join — the same work one
-    # plain iteration does)
-    def full_contrib(st: DataFrame) -> DataFrame:
-        return (
-            edges_w.join(st.select("vertex", "rank"), edges_w.src == F.col("vertex"))
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-
-    fc = full_contrib(state0)
-    state = (
-        state0.join(fc, state0.vertex == fc.dst, "left")
-        .select(
-            "vertex",
-            "deg",
-            "tele",
-            "rank",
-            F.coalesce("contrib", F.lit(0.0)).alias("contrib"),
-            F.lit(0.0).alias("res"),
-        )
-        .localCheckpoint(eager=True)
+    sig_cols = ("src", "dst") if weight is None else ("src", "dst", "w")
+    seeds_str = "" if seeds is None else ",".join(str(int(s)) for s in seeds)
+    ranks = run_supersteps(
+        "pagerank",
+        state,
+        iterations,
+        columns=("vertex", "deg", "tele", "rank"),
+        max_iter=max_iter,
+        per_block=min(max(int(iters_per_check), 1), 6),  # see docstring: plan growth ~3^k
+        metrics=[F.max(F.abs(F.col("rank") - F.col("old"))).alias("delta")],
+        stop=lambda m, _prev: tol > 0 and m["delta"] < tol,
+        harness=harness,
+        pin=(edges_w, sig_cols, f"damping/seeds={float(damping)}/{seeds_str}"),
+        exhausted=None
+        if tol == 0
+        else f"pagerank: no convergence to {tol} in {max_iter} iterations",
     )
-    it = 0
-    while it < max_iter:
-        kk = min(k, max_iter - it)
-        s = state
-        for _ in range(kk):
-            dang, new_rank = _dang_and_update(s, n, damping, seeds)
-            stepped = (
-                s.crossJoin(F.broadcast(dang))
-                .select(
-                    "vertex",
-                    "deg",
-                    "tele",
-                    "contrib",
-                    "res",
-                    F.col("rank").alias("old"),
-                    new_rank.alias("rank"),
-                )
-                .withColumn("res2", F.col("res") + F.col("rank") - F.col("old"))
-                # dangling sources have no out-edges: their mass moves
-                # through the exact dang aggregate, never through res
-                .withColumn(
-                    "act", (F.abs(F.col("res2")) > theta) & (F.col("deg") > 0)
-                )
-            )
-            push = (
-                edges_w.join(
-                    stepped.filter("act").select(
-                        F.col("vertex").alias("_v"),
-                        (F.col("res2") / F.col("deg")).alias("p"),
-                    ),
-                    edges_w.src == F.col("_v"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("p").alias("dp"))
-            )
-            s = stepped.join(push, stepped.vertex == push.dst, "left").select(
-                "vertex",
-                "deg",
-                "tele",
-                "old",
-                "rank",
-                (F.col("contrib") + F.coalesce("dp", F.lit(0.0))).alias("contrib"),
-                F.when(F.col("act"), F.lit(0.0)).otherwise(F.col("res2")).alias("res"),
-            )
-        nxt = s.localCheckpoint(eager=False)
-        delta = nxt.agg(F.max(F.abs(F.col("rank") - F.col("old")))).first()[0]
-        state = nxt.select("vertex", "deg", "tele", "rank", "contrib", "res")
-        it += kk
-        if delta < tol:
-            # exact refresh: rebuild contrib from scratch, run ONE full
-            # iteration, and require ITS true delta < tol
-            fc2 = full_contrib(state)
-            st2 = (
-                state.select("vertex", "deg", "tele", "rank")
-                .join(fc2, state.vertex == fc2.dst, "left")
-                .select(
-                    "vertex",
-                    "deg",
-                    "tele",
-                    "rank",
-                    F.coalesce("contrib", F.lit(0.0)).alias("contrib"),
-                )
-            )
-            dang, new_rank = _dang_and_update(st2, n, damping, seeds)
-            exact = (
-                st2.crossJoin(F.broadcast(dang))
-                .select(
-                    "vertex",
-                    "deg",
-                    "tele",
-                    "contrib",
-                    F.col("rank").alias("old"),
-                    new_rank.alias("rank"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            d2 = exact.agg(F.max(F.abs(F.col("rank") - F.col("old")))).first()[0]
-            it += 1
-            if d2 < tol:
-                edges_w.unpersist()
-                return exact.select("vertex", "rank")
-            # not there yet: continue from the exact state — contrib is
-            # P^T(old), so the fresh delta rides in res until pushed
-            state = exact.select(
-                "vertex",
-                "deg",
-                "tele",
-                "rank",
-                "contrib",
-                (F.col("rank") - F.col("old")).alias("res"),
-            ).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"pagerank(frontier): no convergence to {tol} in {max_iter} iterations"
-    )
+    return ranks.select("vertex", "rank")
 
 
 def katz_centrality(

@@ -60,19 +60,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .superstep import SuperstepHarness, pin_input_signature
+from .superstep import (
+    SuperstepHarness,
+    edge_signature,
+    materialize,
+    pin_input_signature,
+    signature_columns,
+)
 
 # backstop for the monotone inner fixpoints — convergence is guaranteed
 # in <= |V| rounds, so hitting this means a logic bug, not a big graph
 _INNER_BACKSTOP = 1_000_000
-
-
-def _sig(df: DataFrame, *cols: str) -> tuple:
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
 
 
 def _trim_fixpoint(e: DataFrame, n_edges: int) -> tuple[DataFrame, int]:
@@ -136,7 +134,7 @@ def strongly_connected_components(
     phase0 = 0
     if harness is not None:
         resumed = harness.latest()
-        pin_input_signature(harness, resumed, _sig(e0, "u", "v"), "", "scc")
+        pin_input_signature(harness, resumed, edge_signature(e0, "u", "v"), "", "scc")
         if resumed is not None:
             phase0 = resumed[0]
             done = resumed[1].select("vertex", "component").localCheckpoint(eager=True)
@@ -180,23 +178,23 @@ def strongly_connected_components(
         verts = survivors
 
         # ---- COLOR: forward min-id propagation to fixpoint ----
-        color = verts.select("vertex", F.col("vertex").alias("c")).localCheckpoint(
-            eager=True
+        # each round's count+xor signature rides its own checkpoint job
+        sig_cols = signature_columns(("vertex", "c"))
+        color, sig = materialize(
+            verts.select("vertex", F.col("vertex").alias("c")), sig_cols
         )
-        sig = _sig(color, "vertex", "c")
         for _ in range(_INNER_BACKSTOP):
             incoming = (
                 e.join(color.select(F.col("vertex").alias("u"), "c"), "u")
                 .groupBy(F.col("v").alias("vertex"))
                 .agg(F.min("c").alias("inc"))
             )
-            nxt = (
-                color.join(incoming, "vertex", "left")
-                .select("vertex", F.least("c", F.coalesce("inc", "c")).alias("c"))
-                .localCheckpoint(eager=False)
+            color, new_sig = materialize(
+                color.join(incoming, "vertex", "left").select(
+                    "vertex", F.least("c", F.coalesce("inc", "c")).alias("c")
+                ),
+                sig_cols,
             )
-            new_sig = _sig(nxt, "vertex", "c")
-            color = nxt
             if new_sig == sig:
                 break
             sig = new_sig

@@ -24,19 +24,13 @@ def test_precontract_equals_plain_on_corpus(spark):
 def test_rounds_per_check_and_broadcast_equal(spark):
     e = page_edges(generate_pages(spark, 300, seed=21)).repartition(7)
     base = _labels(
-        connected_components(
-            e, pre_contract=False, rounds_per_check=1, local_finish_threshold=0
-        )
+        connected_components(e, pre_contract=False, local_finish_threshold=0)
     )
     assert base == _labels(
-        connected_components(
-            e, rounds_per_check=3, broadcast_threshold=0, local_finish_threshold=0
-        )
+        connected_components(e, broadcast_threshold=0, local_finish_threshold=0)
     )
     assert base == _labels(
-        connected_components(
-            e, rounds_per_check=1, broadcast_threshold=10**9, local_finish_threshold=0
-        )
+        connected_components(e, broadcast_threshold=10**9, local_finish_threshold=0)
     )
     # subcritical local finish (the default hybrid) agrees with all of them
     assert base == _labels(connected_components(e))

@@ -58,23 +58,6 @@ def test_pagerank_chain_with_dangling(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_pagerank_frontier_parity(spark):
-    """Residual-push mode meets the same tolerance contract as the
-    plain loop (uniform AND seeded), including dangling handling —
-    theta shapes wall time, never the answer."""
-    edges = [(i, (i * 7 + 3) % 25) for i in range(40)] + [(3, 30)]  # 30 dangles
-    e = df_edges(spark, edges)
-    for kw in ({}, {"seeds": [1, 2]}):
-        plain = {r.vertex: r.rank for r in pagerank(e, tol=1e-9, **kw).collect()}
-        front = {
-            r.vertex: r.rank
-            for r in pagerank(e, tol=1e-9, frontier=True, **kw).collect()
-        }
-        assert plain.keys() == front.keys()
-        for v in plain:
-            assert front[v] == pytest.approx(plain[v], abs=1e-7)
-
-
 def test_pagerank_star_hub(spark):
     star = [(i, 1000) for i in range(1, 51)]  # 50 spokes -> hub (skew path)
     e = df_edges(spark, star)
@@ -195,8 +178,7 @@ def test_hits_numpy_oracle(spark):
 def test_pagerank_incremental_fold_in(spark):
     """Incremental rank maintenance (verdict r4 #6): folding an edge
     batch into previously-converged ranks via warm_start converges to
-    the SAME fixpoint as from-scratch (1e-6 parity), both in the plain
-    loop and composed with the residual-push frontier; guard rails
+    the SAME fixpoint as from-scratch (1e-6 parity); guard rails
     reject harness/tol=0 combinations."""
     import pytest as _pytest
 
@@ -217,13 +199,6 @@ def test_pagerank_incremental_fold_in(spark):
     for v in cold:
         assert warm[v] == pytest.approx(cold[v], abs=1e-6)
     assert sum(warm.values()) == pytest.approx(1.0, abs=1e-9)
-
-    warm_front = {
-        r.vertex: r.rank
-        for r in pagerank(e_new, tol=1e-9, warm_start=prev, frontier=True).collect()
-    }
-    for v in cold:
-        assert warm_front[v] == pytest.approx(cold[v], abs=1e-6)
 
     with _pytest.raises(ValueError, match="warm_start"):
         pagerank(e_new, tol=0.0, max_iter=5, warm_start=prev)

@@ -67,80 +67,6 @@ def test_cc_small_frontier_broadcasts(spark):
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
 
 
-def _edge_side_not_exchanged(plan: str) -> bool:
-    """True iff the plan's FIRST (edge-side) join input is the cached
-    table with NO exchange above it: in the tree print, everything
-    before the first InMemoryTableScan is the path from the root
-    through the join down to the cached scan — an Exchange there means
-    the cached partitioning was not reused. (The cached plan's own
-    one-time build exchanges print BELOW the InMemoryTableScan line.)"""
-    assert "InMemoryTableScan" in plan, plan
-    return "Exchange" not in plan.split("InMemoryTableScan", 1)[0]
-
-
-def test_cache_partitioned_join_reuses_partitioning(spark):
-    """The shared primitive behind PageRank / HITS / LPA edge caching
-    (edges.cache_partitioned): with colocate=True, an equi-join on the
-    cached key must NOT re-exchange the cached side — localCheckpoint
-    loses the partitioning (UnknownPartitioning), the cached plan keeps
-    it (round-4 finding; this is what makes 'shuffle the edge table
-    once' literally true on a cluster)."""
-    from pyspark.sql import functions as F
-
-    from ccl_spark.edges import cache_partitioned
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        pairs = spark.range(5000).select(
-            (F.col("id") % 500).alias("src"), ((F.col("id") * 7 + 1) % 500).alias("dst")
-        )
-        e = cache_partitioned(pairs, "src", colocate=True)
-        state = spark.range(500).select(
-            F.col("id").alias("src"), F.lit(1.0).alias("rank")
-        ).localCheckpoint(eager=True)
-        assert _edge_side_not_exchanged(_executed(e.join(state, "src")))
-        # control: the default (checkpoint) shape re-exchanges BOTH
-        # sides — acceptable only because the exchange is shared per
-        # job by ReusedExchange across fused iterations
-        e_ckpt = cache_partitioned(pairs, "src")
-        bad = _executed(e_ckpt.join(state, "src"))
-        assert "InMemoryTableScan" not in bad
-        assert bad.count("Exchange hashpartitioning") == 2
-        e.unpersist()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_hits_iteration_no_edge_exchange(spark):
-    """HITS's plan promise (round-3 verdict): in colocate mode, with
-    the two cached edge orientations, NEITHER half-step join
-    re-exchanges the edge relation — only the |V|-sized state
-    shuffles. Audits the REAL half-step builders hits() iterates."""
-    from pyspark.sql import functions as F
-
-    from ccl_spark.hits import _msgs_auth, _msgs_hub, _prepare, hits
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        edges = spark.createDataFrame(
-            [(i, (i * 7 + 1) % 40) for i in range(200)], "src long, dst long"
-        )
-        verts, e_src, e_dst = _prepare(edges, "src", "dst", colocate=True)
-        state = verts.select(
-            "vertex", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
-        ).localCheckpoint(eager=True)
-        assert _edge_side_not_exchanged(_executed(_msgs_auth(e_src, state)))
-        assert _edge_side_not_exchanged(_executed(_msgs_hub(e_dst, state)))
-        e_src.unpersist()
-        e_dst.unpersist()
-        # and the end-to-end iteration contains no row-at-a-time Python
-        assert "BatchEvalPython" not in _executed(hits(edges, max_iter=1))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def test_asof_join_single_shuffle_no_python(spark):
     """asof_join's plan promise: ONE hash exchange (the keyed window),
     no pair-explosion join, no Python stage."""

@@ -3,6 +3,8 @@ the lineage/metrics table."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,6 +78,13 @@ def test_pagerank_resume_rejects_mismatched_edges(spark, tmp_path):
     # the matching edge table still resumes fine
     h3 = SuperstepHarness(spark, root, algo="pagerank", run_id="r3", interval=1)
     assert pagerank(e, tol=1e-10, harness=h3).count() > 0
+
+    # a checkpoint without an input signature (as an older version
+    # wrote them) cannot be checked, so it is not resumed
+    os.remove(f"{root}/input_sig.json")
+    h4 = SuperstepHarness(spark, root, algo="pagerank", run_id="r4", interval=1)
+    with pytest.raises(ValueError, match="no input signature"):
+        pagerank(e, tol=1e-10, harness=h4)
 
 
 def test_pagerank_resume_rejects_mismatched_params(spark, tmp_path):
@@ -234,3 +243,24 @@ def test_lpa_resume_rejects_mismatched_edges(spark, tmp_path):
     h2 = SuperstepHarness(spark, root, algo="lpa", run_id="r2", interval=1)
     with pytest.raises(ValueError, match="does not match"):
         label_propagation(other, max_iter=8, harness=h2)
+
+
+def test_record_costs_at_most_two_jobs(spark, tmp_path):
+    """One checkpoint launches the state write and the lineage write and
+    nothing else: no re-read of the state, no per-partition count job
+    (row counts come from the written files' parquet footers)."""
+    sc = spark.sparkContext
+    state = spark.range(200).repartition(3).localCheckpoint(eager=True)
+    h = SuperstepHarness(spark, str(tmp_path / "jobs"), algo="jobs", run_id="r1")
+    sc.setJobGroup("superstep-record-jobs", "one SuperstepHarness.record call")
+    try:
+        out = h.record(superstep=0, df=state, changed=0, delta=0.0, timer=h.timer())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("superstep-record-jobs")) <= 2
+    assert out is state
+    assert h.latest()[0] == 1
+    lineage = h.lineage().collect()
+    assert sorted(r.partition_id for r in lineage) == [0, 1, 2]
+    assert sum(r.rows for r in lineage) == 200
+    assert {(r.superstep, r.run_id) for r in lineage} == {(0, "r1")}

@@ -1,6 +1,6 @@
 """Incremental PageRank maintenance measurement (round-4 verdict #6):
 fold a ~1% edge batch into previously-converged ranks via warm_start
-(plain and frontier residual-push) vs from-scratch on the merged
+vs from-scratch on the merged
 graph. 6.8M-edge shared corpus, local[32], min of reps; appends the
 table to BENCH/BASELINE.md. The 1% batch is a deterministic hash split
 (xxhash64(src,dst) % 100 == 0), so the run is reproducible.
@@ -64,9 +64,6 @@ def main() -> None:
 
     t_cold = timed(lambda: pagerank(edges, tol=1e-6))
     t_warm = timed(lambda: pagerank(edges, tol=1e-6, warm_start=prev))
-    t_warm_frontier = timed(
-        lambda: pagerank(edges, tol=1e-6, warm_start=prev, frontier=True)
-    )
 
     summary = {
         "edges": n_all,
@@ -75,10 +72,8 @@ def main() -> None:
         "reps": reps,
         "t_cold": round(min(t_cold), 2),
         "t_warm": round(min(t_warm), 2),
-        "t_warm_frontier": round(min(t_warm_frontier), 2),
         "speedup_warm": round(min(t_cold) / min(t_warm), 2),
-        "speedup_warm_frontier": round(min(t_cold) / min(t_warm_frontier), 2),
-        "raw": {"cold": t_cold, "warm": t_warm, "warm_frontier": t_warm_frontier},
+        "raw": {"cold": t_cold, "warm": t_warm},
     }
     print(json.dumps(summary))
     md = REPO / "BENCH" / "BASELINE.md"
@@ -91,8 +86,7 @@ def main() -> None:
             "| mode | seconds | speedup vs cold |\n"
             "|---|---|---|\n"
             f"| from-scratch (cold) | {summary['t_cold']} | 1.0 |\n"
-            f"| warm_start fold-in | {summary['t_warm']} | {summary['speedup_warm']} |\n"
-            f"| warm_start + frontier push | {summary['t_warm_frontier']} | {summary['speedup_warm_frontier']} |\n\n"
+            f"| warm_start fold-in | {summary['t_warm']} | {summary['speedup_warm']} |\n\n"
         )
     spark.stop()
 

@@ -54,14 +54,12 @@ def main() -> None:
     edges = page_edges(pages).localCheckpoint(eager=True)
 
     # --- lpa: one fused round body --------------------------------
-    from ccl_spark.edges import cache_partitioned
-
     pairs = edges.select(F.col("src").cast("long").alias("u"), F.col("dst").cast("long").alias("v"))
-    nbrs = cache_partitioned(
+    nbrs = (
         pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        "v",
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     verts = (
         pairs.select(F.col("u").alias("vertex"))
