@@ -61,13 +61,6 @@ web-scale link graphs, built on the Spark DataFrame API:
                  per-user bot signals, Bradley-Terry preference ratings,
                  seasonal-naive forecast eval
 - ``asof``       as-of and banded range joins
-- ``streaming``  watermarked windows, stateful ages, stream dedup, CC
-                 fold-in, streaming HLL, streaming dedup-index upkeep,
-                 warm-started streaming PageRank, incremental
-                 sessionization fold
-- ``multimodal`` pure-numpy BMP/PNG/JPEG/GIF/WAV/AVI/MP4 decode, features,
-                 DCT perceptual hash + Hamming image near-dup, audio
-                 energy-constellation fingerprints
 - ``sources``    parquet/Iceberg-seam table IO
 - ``components`` component sizes, ages, EOL, dust filtering, incremental CC
 - ``golden``     reference golden-fixture adapters
@@ -81,7 +74,6 @@ web-scale link graphs, built on the Spark DataFrame API:
                  cross-document verbatim-repeat pairs
 - ``coloring``   Jones-Plassmann greedy coloring
 - ``mst``        Borůvka spanning forest + single-linkage clustering
-- ``privacy``    k-anonymity audit, deterministic eps-DP noisy counts
 
 Everything is DataFrame-first: Catalyst handles pushdown/pruning/joins;
 iteration state is checkpointed DataFrames; the only Python on the hot

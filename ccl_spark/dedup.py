@@ -564,7 +564,7 @@ def near_duplicates_fold(
     max_bucket: int | None = 100_000,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """INCREMENTAL MinHash-LSH dedup (the crawl-batch shape, verdict-r4
-    streaming-CC's batch analog): fold a batch of new documents into a
+    incremental-CC analog): fold a batch of new documents into a
     persisted index from :func:`minhash_index` and return the verified
     near-dup pairs touching the batch plus the updated index —
     ``(pairs, new_shingles, new_banded)``.

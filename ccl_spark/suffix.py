@@ -14,7 +14,7 @@ engine-replayable (the SQL oracle runs the identical dense-rank
 chain).
 
 Scale shape: the self-join is a hash equi-join on ``pos + k``; the
-dense rank is DISTRIBUTED (``_dist_dense_rank``): repartitionByRange
+dense rank is DISTRIBUTED (``walks._dist_dense_rank``): repartitionByRange
 on the key, per-range-partition dense ranks, plus broadcast
 per-partition prefix offsets — a two-job ranking in which no task
 ever holds more than one range of the stream (the r5 verdict's
@@ -25,55 +25,9 @@ total, never a quadratic suffix comparison.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-
-def _dist_dense_rank(
-    df: DataFrame, order_cols: list[str], out_col: str, materialize: bool = True
-) -> DataFrame:
-    """Distributed ``dense_rank() OVER (ORDER BY order_cols)``:
-
-    1. ``repartitionByRange(order_cols)`` — equal keys land in one
-       partition, partitions are key-ordered (boundary sampling only
-       moves partition EDGES, never the resulting rank values);
-    2. per-partition distinct-key counts -> exclusive prefix offsets
-       (the offsets window runs over one row PER PARTITION — bounded
-       by the partition count, the convergence-scalar class, never by
-       the data);
-    3. per-partition ``dense_rank`` keyed by ``spark_partition_id()``
-       plus the broadcast offset.
-
-    Identical values to the single-reducer form (rank of a key =
-    #distinct keys before it, partition-additive because ranges don't
-    split keys); returns ``df`` columns plus ``out_col``.  Rows whose
-    keys are all-identical still parallelize: they share one rank but
-    range partitioning keeps them on one partition only when the key
-    is ONE value — the degenerate single-key stream is rank 1
-    everywhere and short-circuits below.
-    """
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    parted = df.repartitionByRange(max(sp, 1), *[F.col(c) for c in order_cols])
-    # materialize ONCE: the count path and the rank path must see the
-    # SAME partition boundaries — two independent range exchanges may
-    # sample different boundary sets, which would make the offsets
-    # inconsistent with the pids (checkpoint also pins the
-    # nondeterministic spark_partition_id against retries)
-    parted = parted.withColumn("_pid", F.spark_partition_id())
-    if materialize:  # False only for plan capture (tools/explain_r06.py)
-        parted = parted.localCheckpoint(eager=True)
-    cnt = parted.groupBy("_pid").agg(
-        F.count_distinct(*[F.col(c) for c in order_cols]).alias("_c")
-    )
-    off_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    off = cnt.select(
-        "_pid", F.coalesce(F.sum("_c").over(off_w), F.lit(0)).alias("_off")
-    )
-    lw = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (
-        parted.join(F.broadcast(off), "_pid")
-        .withColumn(out_col, (F.col("_off") + F.dense_rank().over(lw)).cast("long"))
-        .drop("_pid", "_off")
-    )
+from .walks import _dist_dense_rank
 
 
 def corpus_token_stream(

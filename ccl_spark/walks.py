@@ -291,6 +291,47 @@ def neighbor_sample(
     return out
 
 
+def _dist_dense_rank(df: DataFrame, order_cols: list[str], out_col: str) -> DataFrame:
+    """Distributed ``dense_rank() OVER (ORDER BY order_cols)``:
+
+    1. ``repartitionByRange(order_cols)`` — equal keys land in one
+       partition, partitions are key-ordered (boundary sampling only
+       moves partition EDGES, never the resulting rank values);
+    2. per-partition distinct-key counts -> exclusive prefix offsets
+       (the offsets window runs over one row PER PARTITION — bounded
+       by the partition count, never by the data);
+    3. per-partition ``dense_rank`` keyed by ``spark_partition_id()``
+       plus the broadcast offset.
+
+    Identical values to the single-reducer form (rank of a key =
+    #distinct keys before it, partition-additive because ranges don't
+    split keys); returns ``df`` columns plus ``out_col``.
+    """
+    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    parted = df.repartitionByRange(max(sp, 1), *[F.col(c) for c in order_cols])
+    # materialize ONCE: the count path and the rank path must see the
+    # SAME partition boundaries — two independent range exchanges may
+    # sample different boundary sets, which would make the offsets
+    # inconsistent with the pids (checkpoint also pins the
+    # nondeterministic spark_partition_id against retries)
+    parted = parted.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
+        eager=True
+    )
+    cnt = parted.groupBy("_pid").agg(
+        F.count_distinct(*[F.col(c) for c in order_cols]).alias("_c")
+    )
+    off_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    off = cnt.select(
+        "_pid", F.coalesce(F.sum("_c").over(off_w), F.lit(0)).alias("_off")
+    )
+    lw = Window.partitionBy("_pid").orderBy(*order_cols)
+    return (
+        parted.join(F.broadcast(off), "_pid")
+        .withColumn(out_col, (F.col("_off") + F.dense_rank().over(lw)).cast("long"))
+        .drop("_pid", "_off")
+    )
+
+
 def edge_negatives(
     edges: DataFrame,
     k: int = 5,
@@ -314,8 +355,6 @@ def edge_negatives(
     Returns ``(u, v, draw)`` — draw is the 0-based draw index that
     produced the pair, making the sample's provenance auditable.
     """
-    from .suffix import _dist_dense_rank
-
     und = _symmetrized(edges, src, dst)
     # dense vertex indexing via the distributed two-job ranking
     # (vertex ids are unique, so dense_rank == row_number) — no

@@ -467,46 +467,6 @@ def test_seasonal_naive_eval_hand_computed(spark):
     assert r2.mae == round(2 / 7, 6) and r2.bias == 0.0
 
 
-def test_k_anonymity_flags_small_groups(spark):
-    from ccl_spark.privacy import k_anonymity
-
-    rows = [(u, "a") for u in range(10)] + [(99, "rare"), (99, "rare"), (100, "rare")]
-    df = spark.createDataFrame(rows, "user_id long, seg string")
-    got = {r.seg: r for r in k_anonymity(df, ["seg"], k=5).collect()}
-    assert got["a"].n_users == 10 and got["a"].violates == 0
-    # 3 rows but only 2 distinct users -> violates at k=5
-    assert got["rare"].n_users == 2 and got["rare"].n_rows == 3
-    assert got["rare"].violates == 1
-
-
-def test_dp_counts_noise_matches_inverse_cdf(spark):
-    import hashlib
-    import math
-
-    from ccl_spark.privacy import dp_counts
-
-    rows = [(f"g{i % 4}",) for i in range(200)]
-    df = spark.createDataFrame(rows, "seg string")
-    got = {r.group: r for r in dp_counts(df, "seg", eps=1.0).collect()}
-
-    from collections import Counter
-
-    true = Counter(g for g, in rows)
-    for g, n in true.items():
-        u = int(hashlib.md5(f"{g},dp".encode()).hexdigest()[:15], 16) / float(16**15)
-        noise = -1.0 * math.copysign(1.0, u - 0.5) * math.log(1.0 - 2.0 * abs(u - 0.5))
-        want = round(max(0.0, n + noise), 6)
-        assert got[g].n == n
-        assert got[g].noisy_n == pytest.approx(want, abs=2e-6)
-    # noise is bounded in practice and deterministic across runs
-    again = {r.group: r.noisy_n for r in dp_counts(df, "seg", eps=1.0).collect()}
-    assert again == {g: r.noisy_n for g, r in got.items()}
-    # larger eps -> smaller noise magnitude
-    tight = {r.group: r.noisy_n for r in dp_counts(df, "seg", eps=10.0).collect()}
-    for g in true:
-        assert abs(tight[g] - true[g]) <= abs(got[g].noisy_n - true[g]) + 1e-9
-
-
 def test_touch_attribution_hand_computed(spark):
     from ccl_spark.analytics import touch_attribution
 

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from ccl_spark.dedup import (
@@ -9,59 +7,6 @@ from ccl_spark.dedup import (
     near_duplicates,
     near_duplicates_fold,
 )
-from ccl_spark.multimodal import gif_decode, gif_encode, gif_synth_pixels
-
-
-# ----------------------------------------------------------------- GIF
-
-
-def test_gif_roundtrip_many_colors():
-    rng = np.random.default_rng(7)
-    pal = rng.integers(0, 256, (256, 3)).astype(np.uint8)
-    idx = rng.integers(0, 256, (64, 48)).astype(np.uint8)
-    img = pal[idx]  # random indices: LZW crosses several width bumps
-    assert (gif_decode(gif_encode(img)) == img).all()
-
-
-def test_gif_roundtrip_tiny_and_flat():
-    img = np.zeros((5, 7, 3), np.uint8)
-    img[2:, 3:] = [255, 0, 0]
-    assert (gif_decode(gif_encode(img)) == img).all()
-    flat = np.full((3, 3, 3), 9, np.uint8)
-    assert (gif_decode(gif_encode(flat)) == flat).all()
-
-
-def test_gif_decode_spec_fixture():
-    # canonical 1x1 black-pixel GIF89a, hand-assembled per the spec
-    # (Appendix F LZW: clear=4, pixel code 0, eoi=5 at width 3) — pins
-    # the decoder against spec BYTES, not just our own encoder
-    fix = bytes.fromhex(
-        "474946383961" "0100" "0100" "80" "00" "00"
-        "000000" "ffffff"
-        "2c" "0000" "0000" "0100" "0100" "00"
-        "02" "02" "4401" "00" "3b"
-    )
-    out = gif_decode(fix)
-    assert out.shape == (1, 1, 3) and (out == 0).all()
-
-
-def test_gif_decode_skips_extensions():
-    img = gif_synth_pixels(3)
-    payload = gif_encode(img)
-    # splice a graphic-control extension between the palette and the
-    # image descriptor — decoders must skip it (compute the real
-    # descriptor offset: 13-byte header + global color table)
-    at = 13 + 3 * (2 << (payload[10] & 0x07))
-    assert payload[at] == 0x2C
-    gce = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-    assert (gif_decode(payload[:at] + gce + payload[at:]) == img).all()
-
-
-def test_gif_encode_refuses_true_color():
-    rng = np.random.default_rng(1)
-    img = rng.integers(0, 256, (32, 32, 3)).astype(np.uint8)
-    with pytest.raises(ValueError, match="quantize"):
-        gif_encode(img)
 
 
 # --------------------------------------------------------- MinHash fold

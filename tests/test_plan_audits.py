@@ -290,16 +290,6 @@ def test_fuzzy_match_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_audio_fingerprint_media_keyed(spark):
-    from ccl_spark.multimodal import audio_fingerprints, synth_dup_audio
-
-    plan = _executed(audio_fingerprints(synth_dup_audio(spark, 4)))
-    # anchor pairing joins on media_id (never across clips); the only
-    # Python stage is the Arrow decode
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_linkpred_eval_no_all_pairs(spark):
     from ccl_spark.graphstats import link_prediction_eval
 

@@ -9,7 +9,7 @@ import pandas as pd
 from pyspark.sql import Window, functions as F
 
 from ccl_spark import datagen as dg
-from ccl_spark.suffix import _dist_dense_rank
+from ccl_spark.walks import _dist_dense_rank
 
 
 def _executed(df) -> str:

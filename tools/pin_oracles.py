@@ -52,11 +52,6 @@ PINNED = [
     "ann_ivf_topk",
     "ann_pq_topk",
     "ann_ivfpq_topk",
-    "multimodal_jpeg",
-    "multimodal_gif",
-    "multimodal_mp4",
-    "image_near_dup",
-    "video_near_dup",
     "compression",
 ]
 SF_DIR = "/root/testdata/sf0.01"
@@ -216,40 +211,6 @@ def _cosine(a: np.ndarray, b: np.ndarray) -> float:
     return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
 
 
-def _naive_phash(pix) -> int:
-    """NAIVE O(n^4) double-loop DCT pHash — deliberately independent
-    of the engine's matrix-product DCT (multimodal.phash64); shared by
-    the image and video near-dup pin crosschecks."""
-    import math
-
-    import numpy as np
-
-    gray = pix.astype(np.float64).mean(axis=2)
-    hh, ww = gray.shape
-    small = np.empty((32, 32))
-    for y in range(32):
-        for x in range(32):
-            small[y, x] = gray[y * hh // 32, x * ww // 32]
-    coef = np.empty((8, 8))
-    for u in range(8):
-        for v in range(8):
-            s = 0.0
-            for y in range(32):
-                for x in range(32):
-                    s += (
-                        small[y, x]
-                        * math.cos((2 * y + 1) * u * math.pi / 64)
-                        * math.cos((2 * x + 1) * v * math.pi / 64)
-                    )
-            cu = math.sqrt(1 / 32) if u == 0 else math.sqrt(2 / 32)
-            cv = math.sqrt(1 / 32) if v == 0 else math.sqrt(2 / 32)
-            coef[u, v] = cu * cv * s
-    block = coef.ravel()
-    med = np.median(block)
-    bits = (block > med).astype(np.uint8)
-    return int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
-
-
 def crosscheck_pinned(name: str, pdf: pd.DataFrame, sf_dir: str = SF_DIR) -> None:
     """Raise AssertionError unless the pinned rows agree with the
     independent implementation."""
@@ -288,178 +249,6 @@ def crosscheck_pinned(name: str, pdf: pd.DataFrame, sf_dir: str = SF_DIR) -> Non
             assert int(vid) != 0
             true = _cosine(by_id[int(vid)], q)
             assert abs(cos - true) <= 1e-6, (name, vid, cos, true)
-    elif name == "multimodal_jpeg":
-        # width/height must equal the synth id-formula (independent
-        # arithmetic: w = 16 + i%64, h = 16 + i%48 — the engine path
-        # reads them from the DECODED SOF header, so agreement means
-        # the Huffman/marker parse found the real frame); n_bytes must
-        # be a plausible entropy-coded size (smaller than raw pixels,
-        # bigger than the fixed marker overhead) and f0 a valid
-        # normalized-pixel mean. The decoded-PIXEL correctness bound
-        # (round-trip vs the pre-encode source) is pinned by
-        # tests/test_pipeline_ops.py::test_jpeg_roundtrip.
-        for i, nb, wpx, hpx, f0 in zip(
-            pdf["media_id"], pdf["n_bytes"], pdf["width"], pdf["height"], pdf["f0"]
-        ):
-            assert int(wpx) == 16 + int(i) % 64, (name, i, wpx)
-            assert int(hpx) == 16 + int(i) % 48, (name, i, hpx)
-            assert 400 < int(nb) < 3 * int(wpx) * int(hpx) + 700, (name, i, nb)
-            assert 0.0 < float(f0) < 1.0, (name, i, f0)
-    elif name == "multimodal_gif":
-        # GIF is lossless: replay the synth source pixels with the
-        # shared formula and assert the decoded-pixel feature EXACTLY
-        # (the engine read these pixels back out of the LZW stream),
-        # plus the id-formula dims and a sane container size.
-        from ccl_spark.multimodal import _fold, gif_synth_pixels
-
-        for i, nb, wpx, hpx, f0 in zip(
-            pdf["media_id"], pdf["n_bytes"], pdf["width"], pdf["height"], pdf["f0"]
-        ):
-            pix = gif_synth_pixels(int(i), seed=42)
-            assert int(wpx) == pix.shape[1] == 16 + int(i) % 48, (name, i, wpx)
-            assert int(hpx) == pix.shape[0] == 16 + int(i) % 32, (name, i, hpx)
-            expect = round(_fold(pix / 255.0, 8)[0], 5)
-            # f0 travels as float32 through the Arrow stage; two
-            # representations of the same 5-decimal value differ <1e-7
-            assert abs(float(f0) - expect) <= 1e-6, (name, i, f0, expect)
-            # palette size varies with the distinct colors the small
-            # pattern actually hits; only the structural floor is fixed
-            assert 30 < int(nb) <= 3 * int(wpx) * int(hpx) + 1000, (name, i, nb)
-    elif name == "multimodal_mp4":
-        # raw-RGB24 MP4 is lossless: regenerate the synth frames with
-        # the shared id formula and assert the decoded mean-frame
-        # feature EXACTLY, plus the id-formula dims and a container
-        # size equal to raw samples + fixed box overhead bounds.
-        import numpy as np
-
-        from ccl_spark.multimodal import _fold
-
-        for i, nb, wpx, hpx, f0 in zip(
-            pdf["media_id"], pdf["n_bytes"], pdf["width"], pdf["height"], pdf["f0"]
-        ):
-            i = int(i)
-            rng = np.random.RandomState(42 + i)
-            h, w = 8 + i % 24, 8 + i % 32
-            n_frames = 2 + i % 3
-            frames = [
-                rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
-                for _ in range(n_frames)
-            ]
-            assert int(wpx) == w and int(hpx) == h, (name, i, wpx, hpx)
-            feats = np.array(
-                [_fold(f / 255.0, 8) for f in frames], dtype=np.float32
-            )
-            expect = round(float(feats.mean(axis=0)[0]), 5)
-            assert abs(float(f0) - expect) <= 1e-6, (name, i, f0, expect)
-            raw = sum(f.size for f in frames)
-            assert raw < int(nb) < raw + 800, (name, i, nb, raw)
-    elif name == "image_near_dup":
-        # full independent replay: regenerate every synth image from
-        # the id formula, hash with a NAIVE O(n^4) double-loop DCT
-        # (independent of the engine's matrix-product DCT), and build
-        # the pair set by brute force over all image pairs with the
-        # pigeonhole condition modeled explicitly.
-        import numpy as np
-
-        naive_phash = _naive_phash
-
-        def synth_pair_pixels(p, seed=42):
-            rng = np.random.default_rng(seed * 7_000_003 + p)
-            h, w = 24 + p % 16, 24 + p % 24
-            yy, xx = np.mgrid[0:h, 0:w]
-            base = (
-                (128 + 100 * np.sin(xx / (3.0 + p % 5)) * np.cos(yy / (2.0 + p % 7)))
-                .clip(0, 255).astype(np.uint8)
-            )
-            pix = np.stack([base, np.roll(base, p % 4, axis=1), base[::-1]], axis=2)
-            pert = pix.copy()
-            ys = rng.integers(0, h, size=3)
-            xs = rng.integers(0, w, size=3)
-            pert[ys, xs] = np.clip(pert[ys, xs].astype(int) + 12, 0, 255).astype(np.uint8)
-            return {2 * p: pix, 2 * p + 1: pert}
-
-        hashes = {}
-        for p in range(60):
-            for mid, pix in synth_pair_pixels(p).items():
-                hashes[mid] = naive_phash(pix)
-        exp_pairs = {}
-        ids = sorted(hashes)
-        for i, a in enumerate(ids):
-            for b in ids[i + 1:]:
-                x = (hashes[a] ^ hashes[b]) & ((1 << 64) - 1)
-                ham = bin(x).count("1")
-                agree = any(
-                    ((hashes[a] >> (16 * pc)) & 0xFFFF)
-                    == ((hashes[b] >> (16 * pc)) & 0xFFFF)
-                    for pc in range(4)
-                )
-                if ham <= 10 and agree:
-                    exp_pairs[(a, b)] = ham
-        got = {(int(r.id_a), int(r.id_b)): int(r.hamming) for r in pdf.itertuples()}
-        assert got == exp_pairs, (
-            name, len(got), len(exp_pairs),
-            set(got) ^ set(exp_pairs),
-        )
-    elif name == "video_near_dup":
-        # full independent replay: regenerate every synth video's
-        # frames from the id formula (multimodal.synth_near_dup_videos
-        # seed 42), apply the evenly-spaced sampling rule, mean the
-        # sampled frames in float64, hash with the NAIVE double-loop
-        # DCT, and model the pigeonhole condition explicitly.
-        import numpy as np
-
-        def synth_video_frames(p, seed=42):
-            rng = np.random.default_rng(seed * 9_000_017 + p)
-            h, w = 24 + p % 16, 24 + p % 24
-            n_frames = 2 + p % 3
-            yy, xx = np.mgrid[0:h, 0:w]
-            orig, pert = [], []
-            for t in range(n_frames):
-                base = (
-                    (128 + 100 * np.sin(xx / (3.0 + p % 5) + t)
-                     * np.cos(yy / (2.0 + p % 7) - t))
-                    .clip(0, 255).astype(np.uint8)
-                )
-                pix = np.stack([base, np.roll(base, p % 4, axis=1), base[::-1]], axis=2)
-                orig.append(pix)
-                cp = pix.copy()
-                ys = rng.integers(0, h, size=3)
-                xs = rng.integers(0, w, size=3)
-                cp[ys, xs] = np.clip(cp[ys, xs].astype(int) + 12, 0, 255).astype(np.uint8)
-                pert.append(cp)
-            return {2 * p: orig, 2 * p + 1: pert}
-
-        def mean_sampled(frames, n_sample=3):
-            f = len(frames)
-            if f <= n_sample:
-                idx = list(range(f))
-            else:
-                idx = sorted({i * (f - 1) // (n_sample - 1) for i in range(n_sample)})
-            stack = np.stack([frames[i] for i in idx]).astype(np.float64)
-            return stack.sum(axis=0) / len(idx)
-
-        hashes = {}
-        for p in range(40):
-            for mid, frames in synth_video_frames(p).items():
-                hashes[mid] = _naive_phash(mean_sampled(frames))
-        exp_pairs = {}
-        ids = sorted(hashes)
-        for i, a in enumerate(ids):
-            for b in ids[i + 1:]:
-                x = (hashes[a] ^ hashes[b]) & ((1 << 64) - 1)
-                ham = bin(x).count("1")
-                agree = any(
-                    ((hashes[a] >> (16 * pc)) & 0xFFFF)
-                    == ((hashes[b] >> (16 * pc)) & 0xFFFF)
-                    for pc in range(4)
-                )
-                if ham <= 10 and agree:
-                    exp_pairs[(a, b)] = ham
-        got = {(int(r.id_a), int(r.id_b)): int(r.hamming) for r in pdf.itertuples()}
-        assert got == exp_pairs, (
-            name, len(got), len(exp_pairs),
-            set(got) ^ set(exp_pairs),
-        )
     elif name == "compression":
         # independent recompute: zlib directly over the parquet text
         import zlib
