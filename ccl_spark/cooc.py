@@ -220,12 +220,7 @@ def textrank_keywords(
         )
         .select("src", "dst", F.col("cnt").cast("double").alias("w"))
     )
-    # vocab-sized state: fuse every round into one materialization
-    # block (min with pagerank's fusion cap of 6) — the graph has
-    # O(vocab²) edges, so job-count latency dominates, not DAG depth
-    pr = pagerank(
-        e, tol=0.0, max_iter=n_iter, weight="w", iters_per_check=min(n_iter, 6)
-    )
+    pr = pagerank(e, tol=0.0, max_iter=n_iter, weight="w")
     return (
         pr.join(ids, pr["vertex"] == ids["vid"])
         .select(F.col("term").alias("keyword"), F.round("rank", 6).alias("rank"))

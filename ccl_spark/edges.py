@@ -13,10 +13,10 @@ reference never materializes — SURVEY.md §1). Layout per FIXTURES.md:
   downstream two-phase aggregation over hub vertices can group by
   (src, salt) first and by src second.
 - iterative algorithms checkpoint their own edge side once per run
-  and let each materialized job exchange it once (ReusedExchange
-  shares that exchange across fused iterations); on real storage the
-  co-located layout is an Iceberg bucket(src) partition spec +
-  sorted-by-src data files.
+  and let each materialized job broadcast or exchange it once
+  (ReusedExchange shares an exchange across fused iterations); on
+  real storage the co-located layout is an Iceberg bucket(src)
+  partition spec + sorted-by-src data files.
 """
 
 from __future__ import annotations
@@ -125,10 +125,6 @@ def page_edges(
 
 def with_salt(edges: DataFrame, n_salts: int = 64) -> DataFrame:
     return edges.withColumn("salt", F.pmod(F.xxhash64("src"), F.lit(n_salts)).cast("int"))
-
-
-def url_vertices(pages: DataFrame) -> DataFrame:
-    return pages.select(url_id("url").alias("vertex")).distinct()
 
 
 def degrees(edges: DataFrame) -> DataFrame:

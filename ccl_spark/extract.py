@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, functions as F
 
 _P_RE = re.compile(r"<p>(.*?)</p>", re.S)
 _HREF_RE = re.compile(r'href="([^"]+)"')
-_A_RE = re.compile(r'<a href="([^"]+)">([^<]*)</a>')
 
 # Spark and Python regex syntax agree for these patterns.
 _P_SQL = "<p>(.*?)</p>"
@@ -61,11 +60,6 @@ def extract_link_pairs(pages: DataFrame) -> DataFrame:
         .filter(F.col("dst_url") != F.col("src_url"))
         .distinct()
     )
-
-
-def extract_anchors_py(html: bytes) -> list[tuple[str, str]]:
-    """Reference extractor: (href, anchor-text) pairs of the <a> tags."""
-    return _A_RE.findall(html.decode("utf-8"))
 
 
 def extract_anchor_pairs(pages: DataFrame) -> DataFrame:

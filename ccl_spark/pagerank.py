@@ -6,18 +6,26 @@ every step. Convergence: max per-vertex |delta| < tol (north rule:
 per-vertex scores allclose 1e-6 at convergence).
 
 Scale design:
-- The edge side is joined with out-degrees ONCE and checkpointed; each
-  fused block re-exchanges it once, shared across the block's
-  iterations by ReusedExchange.
-- Per-iteration work is one equi-join + one groupBy(dst).sum — both
-  whole-stage-codegen hash aggregates with map-side partial sums, so a
-  hub with 10^6 in-links is combined map-side before the shuffle; AQE
-  skew-join handles residual skew.
-- Iterations run in the shared superstep loop
-  (superstep.run_supersteps): each block of fused iterations is one
-  eager checkpoint that carries the max-delta convergence metric in
-  the same job; with a SuperstepHarness the ranks persist to parquet +
-  lineage rows for mid-algorithm resume.
+- One augmented edge table is built and checkpointed once per run: every
+  distinct (src, dst[, w]) pair plus one self-row (v, v) per vertex.
+  The self-rows carry each vertex's own state through the step, so a
+  step is one equi-join of that table with the rank state and ONE
+  groupBy(dst) that yields every vertex's next state: the summed
+  contributions and, from the self-row, its old rank, degree and
+  teleport weight. No second join against the state, no in-plan
+  scalar aggregate, no cross join.
+- The dangling mass is a scalar the loop already observes: it rides the
+  step's checkpoint job next to ``delta`` (and the start state's
+  checkpoint for the first step), and the next step reads it as a
+  literal.
+- One iteration per materialization (superstep.run_supersteps). At
+  small sizes the planner broadcasts the table, so a step is 3 Spark
+  jobs: the broadcast, the aggregate's shuffle map and the checkpoint.
+  Bigger graphs, and inputs without a size estimate (rows parallelized
+  from a Python list), take a shuffled join feeding the same single
+  aggregate, whose map-side partial sums combine a hub's in-links
+  before the shuffle. With a SuperstepHarness the ranks persist to
+  parquet + lineage rows for mid-algorithm resume.
 
 The reference has no PageRank; this generalizes its per-component
 bookkeeping to per-vertex scores per the driver north_star.
@@ -27,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .superstep import SuperstepHarness, run_supersteps
+from .superstep import SuperstepHarness, materialize, run_supersteps
 
 
 def pagerank(
@@ -39,40 +47,26 @@ def pagerank(
     max_iter: int = 300,
     vertices: DataFrame | None = None,
     harness: SuperstepHarness | None = None,
-    iters_per_check: int = 3,
     seeds: list[int] | None = None,
     warm_start: DataFrame | None = None,
     weight: str | None = None,
 ) -> DataFrame:
     """Return ``(vertex long, rank double)``; ranks sum to 1.
 
+    Each iteration is one join of the augmented edge table (see the
+    module docstring) with the rank state and one aggregate, checkpointed
+    with its ``delta`` and dangling mass observed in the same job.
     ``tol=0`` disables the convergence test and runs exactly
     ``max_iter`` iterations — fixed-iteration mode, used when an
     external oracle must reproduce the identical deterministic
-    sequence (block fusion never changes the arithmetic or the
-    iteration count: blocks always sum to ``max_iter``).
-
-    ``iters_per_check`` fuses k power iterations into one lazy plan
-    per materialization + convergence check; the dangling-mass scalar
-    is computed in-plan (1-row aggregate, broadcast cross join) instead
-    of a per-iteration driver round-trip. Measured at 341k edges /
-    100k vertices: k=3 cuts wall time ~25% vs k=1 (fewer jobs, state
-    is small so the deeper DAG is cheap — the opposite trade from CC's
-    edge-rewriting rounds, where fusion loses). Convergence may
-    overshoot by up to k-1 extra iterations — never fewer.
-
-    Within a fused block each iteration references the previous state
-    three times (dangling aggregate, contribs join, self) with no
-    materialization between, so the unsaved-recomputation bound grows
-    ~3^k; exchange reuse hides it at the measured default k=3 but not
-    arbitrarily, so k is capped at 6 (ADVICE r2).
+    sequence. With ``tol > 0`` the run stops at the first iteration
+    whose max per-vertex |delta| is below ``tol``.
 
     ``seeds`` switches to PERSONALIZED PageRank (the TrustRank shape):
     teleport and dangling mass go to the seed set uniformly instead of
     to all vertices — rank concentrates around the seeds, vertices
-    unreachable from them converge to 0. The uniform path is left
-    arithmetically untouched (bit-identical to the fixed-iteration
-    oracle sequence).
+    unreachable from them converge to 0. The uniform path keeps its
+    own arithmetic (teleport 1/n, dangling mass / n).
 
     ``warm_start`` (columns ``vertex, rank``) is INCREMENTAL RANK
     MAINTENANCE (verdict r4 #6): initialize from previously-converged
@@ -102,7 +96,9 @@ def pagerank(
     parameters (damping, seed set) are pinned, so resuming against a
     different graph or recurrence raises. ``tol`` is deliberately NOT
     pinned: it only decides when to stop, so resuming to a tighter
-    tolerance is a legitimate continuation of the same recurrence.
+    tolerance is a legitimate continuation of the same recurrence. The
+    dangling mass is re-derived from the resumed state, so a resumed
+    run continues the same iterate sequence.
     """
     if weight is None:
         pairs = edges.select(
@@ -123,20 +119,30 @@ def pagerank(
     )
     if vertices is not None:
         verts = verts.unionByName(vertices.select(F.col("vertex").cast("long")))
-    verts = verts.distinct().localCheckpoint(eager=True)
-    n = verts.count()
+    is_self = F.col("self")
+    self_w = [] if weight is None else [F.lit(None).cast("double").alias("w")]
+    # the augmented edge table: the distinct pairs plus one self-row per
+    # vertex, checkpointed once for the run; the vertex count rides the
+    # same job
+    aug, m = materialize(
+        pairs.withColumn("self", F.lit(False)).unionByName(
+            verts.distinct().select(
+                F.col("vertex").alias("src"),
+                F.col("vertex").alias("dst"),
+                *self_w,
+                F.lit(True).alias("self"),
+            )
+        ),
+        [F.count(F.when(is_self, 1)).alias("n")],
+    )
+    n = m["n"]
     if n == 0:
-        return verts.select("vertex", F.lit(0.0).alias("rank"))
+        return aug.select(F.col("src").alias("vertex"), F.lit(0.0).alias("rank"))
 
-    if weight is None:
-        out_deg = pairs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    else:
-        out_deg = pairs.groupBy("src").agg(F.sum("w").alias("deg"))
-    # the edge side is joined with out-degrees once and checkpointed for
-    # the iteration's lifetime; a checkpoint reports UnknownPartitioning,
-    # so each block re-exchanges it ONCE, shared across the block's fused
-    # iterations by ReusedExchange
-    edges_w = pairs.join(out_deg, "src").localCheckpoint(eager=True)
+    pair_rows = aug.filter(~is_self)
+    out_deg = pair_rows.groupBy(F.col("src").alias("vertex")).agg(
+        F.count(F.lit(1)).alias("deg") if weight is None else F.sum("w").alias("deg")
+    )
     # teleport column: uniform 1/n, or 1/|seeds| on the seed set
     if seeds is not None:
         if not seeds:
@@ -147,11 +153,10 @@ def pagerank(
         ).otherwise(F.lit(0.0))
     else:
         tele = F.lit(1.0 / n)
-    # iteration state carries deg so delta + next-dangling come from the
-    # block's own job (driver round-trips are the fixed cost that caps
-    # strong scaling on small inputs)
     state = (
-        verts.join(out_deg, verts.vertex == out_deg.src, "left")
+        aug.filter(is_self)
+        .select(F.col("src").alias("vertex"))
+        .join(out_deg, "vertex", "left")
         .select(
             "vertex",
             F.coalesce("deg", F.lit(0)).alias("deg"),
@@ -184,7 +189,6 @@ def pagerank(
         if not tot or tot <= 0:
             raise ValueError("pagerank: warm_start ranks sum to zero")
         state = state.withColumn("rank", F.col("rank") / F.lit(float(tot)))
-    state = state.localCheckpoint(eager=True)
 
     base = (1.0 - damping) / n
     per_edge = (
@@ -192,59 +196,51 @@ def pagerank(
         if weight is None
         else (F.col("rank") * F.col("w") / F.col("deg"))
     )
+    dangling = F.sum(F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0)))
 
-    def iterations(s: DataFrame, k: int, _prev: dict) -> DataFrame:
-        for _ in range(k):
-            # dangling mass in-plan: 1-row aggregate broadcast into the
-            # update expression — no driver round-trip per iteration.
-            # Uniform mode divides by n once in the aggregate (keeps the
-            # original arithmetic bit-identical); seeded mode multiplies
-            # the raw dangling sum by the per-vertex teleport weight.
-            dang_sum = F.sum(
-                F.when(F.col("deg") == 0, F.col("rank")).otherwise(F.lit(0.0))
+    def own(c: str):
+        """The self-row's value of state column ``c``."""
+        return F.max(F.when(is_self, F.col(c)))
+
+    def step(s: DataFrame, _k: int, prev: dict) -> DataFrame:
+        # prev["dang"] is the dangling mass of ``s``, observed when ``s``
+        # was checkpointed. Uniform mode spreads it as dang / n; seeded
+        # mode multiplies it by the per-vertex teleport weight.
+        contrib = F.coalesce("contrib", F.lit(0.0))
+        if seeds is None:
+            new_rank = F.lit(base) + F.lit(damping) * (contrib + F.lit(prev["dang"] / n))
+        else:
+            new_rank = F.lit(1.0 - damping) * F.col("tele") + F.lit(damping) * (
+                contrib + F.lit(prev["dang"]) * F.col("tele")
             )
-            if seeds is None:
-                dang = s.agg((dang_sum / n).alias("dn"))
-                new_rank = F.lit(base) + F.lit(damping) * (
-                    F.coalesce("contrib", F.lit(0.0)) + F.col("dn")
-                )
-            else:
-                dang = s.agg(dang_sum.alias("dn"))
-                new_rank = F.lit(1.0 - damping) * F.col("tele") + F.lit(damping) * (
-                    F.coalesce("contrib", F.lit(0.0)) + F.col("dn") * F.col("tele")
-                )
-            contribs = (
-                edges_w.join(s.select("vertex", "rank"), edges_w.src == F.col("vertex"))
-                .select("dst", per_edge.alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("contrib"))
+        return (
+            aug.join(s.withColumnRenamed("vertex", "src"), "src")
+            .groupBy(F.col("dst").alias("vertex"))
+            .agg(
+                F.sum(F.when(~is_self, per_edge)).alias("contrib"),
+                own("rank").alias("old"),
+                own("deg").alias("deg"),
+                own("tele").alias("tele"),
             )
-            s = (
-                s.join(contribs, s.vertex == contribs.dst, "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "vertex",
-                    "deg",
-                    "tele",
-                    F.col("rank").alias("old"),
-                    new_rank.alias("rank"),
-                )
-            )
-        return s
+            .select("vertex", "deg", "tele", "old", new_rank.alias("rank"))
+        )
 
     sig_cols = ("src", "dst") if weight is None else ("src", "dst", "w")
     seeds_str = "" if seeds is None else ",".join(str(int(s)) for s in seeds)
     ranks = run_supersteps(
         "pagerank",
         state,
-        iterations,
+        step,
         columns=("vertex", "deg", "tele", "rank"),
         max_iter=max_iter,
-        per_block=min(max(int(iters_per_check), 1), 6),  # see docstring: plan growth ~3^k
-        metrics=[F.max(F.abs(F.col("rank") - F.col("old"))).alias("delta")],
+        metrics=[
+            F.max(F.abs(F.col("rank") - F.col("old"))).alias("delta"),
+            dangling.alias("dang"),
+        ],
+        start_metrics=[dangling.alias("dang")],
         stop=lambda m, _prev: tol > 0 and m["delta"] < tol,
         harness=harness,
-        pin=(edges_w, sig_cols, f"damping/seeds={float(damping)}/{seeds_str}"),
+        pin=(pair_rows, sig_cols, f"damping/seeds={float(damping)}/{seeds_str}"),
         exhausted=None
         if tol == 0
         else f"pagerank: no convergence to {tol} in {max_iter} iterations",
@@ -423,12 +419,12 @@ def spam_mass(
     uniform rank (the trusted core itself).  ``pr`` is strictly positive
     (uniform teleport floor), so the division is total.
 
-    Two independent fixed-iteration power runs over the SAME cached
-    out-degree/edge tables — at cluster scale the second run reuses
-    the first's shuffled edge partitioning (no extra edge exchange,
-    only the |V|-sized state differs).  The ratio is taken on the
-    UNROUNDED ranks (a 6dp pre-round would zero out small ranks on
-    big graphs and 0/0 the ratio); reported columns round to 6dp.
+    Two independent fixed-iteration power runs: each builds and
+    checkpoints its own augmented edge table and shares nothing with
+    the other, so the edge side is read and shuffled twice.  The ratio
+    is taken on the UNROUNDED ranks (a 6dp pre-round would zero out
+    small ranks on big graphs and 0/0 the ratio); reported columns
+    round to 6dp.
 
     Returns ``(vertex long, pr double, tr double, spam_mass double)``.
     """

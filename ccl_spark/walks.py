@@ -317,8 +317,11 @@ def _dist_dense_rank(df: DataFrame, order_cols: list[str], out_col: str) -> Data
     parted = parted.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
         eager=True
     )
+    # distinct keys as one struct: a key with a NULL column still counts,
+    # as dense_rank ranks it (count_distinct over the bare columns would
+    # skip it and shift every later partition's offset)
     cnt = parted.groupBy("_pid").agg(
-        F.count_distinct(*[F.col(c) for c in order_cols]).alias("_c")
+        F.count_distinct(F.struct(*order_cols)).alias("_c")
     )
     off_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     off = cnt.select(

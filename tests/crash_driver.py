@@ -46,7 +46,7 @@ def run(algo: str, spark, harness: SuperstepHarness | None) -> DataFrame:
     edges = spark.createDataFrame(EDGES, "src long, dst long")
     if algo == "cc":
         return connected_components(edges, harness=harness, local_finish_threshold=0)
-    return pagerank(edges, tol=0.0, max_iter=4, iters_per_check=1, harness=harness)
+    return pagerank(edges, tol=0.0, max_iter=4, harness=harness)
 
 
 def _killer(pid: int):

@@ -348,3 +348,48 @@ def test_lp_features_single_wedge_aggregate(spark):
     # ONE aggregate computes all three wedge sums together
     assert "functions=[count(1), sum((1.0 / ln" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_pagerank_iteration_costs_at_most_three_jobs(spark, monkeypatch):
+    """A PageRank iteration is one join of the augmented edge table with
+    the rank state plus one aggregate, checkpointed with its metrics in
+    the same job: 4 more iterations cost at most 12 more Spark jobs (the
+    broadcast, the shuffle map and the checkpoint each). The dangling
+    mass is an observed scalar, so no step plan holds a cartesian
+    product or a nested-loop join."""
+    from ccl_spark import superstep
+
+    plans = []
+    real = superstep.materialize
+
+    def spy(df, *args, **kwargs):
+        plans.append(_executed(df))
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(superstep, "materialize", spy)
+    # a cycle-rich core plus dangling sinks 100..103, built from ranges so
+    # the planner knows the input's size, as it does for a parquet scan
+    # (rows parallelized from a Python list carry no size estimate, and
+    # the join then falls back to the shuffled plan)
+    core = spark.range(30).select(
+        F.col("id").alias("src"), ((F.col("id") * 7 + 3) % 30).alias("dst")
+    )
+    sinks = spark.range(0, 30, 3).select(
+        F.col("id").alias("src"), (F.col("id") % 4 + 100).alias("dst")
+    )
+    e = core.unionByName(sinks)
+    sc = spark.sparkContext
+    jobs = {}
+    for k in (2, 6):
+        group = f"pagerank-jobs-{k}"
+        sc.setJobGroup(group, f"pagerank max_iter={k}")
+        try:
+            pagerank(e, tol=0.0, max_iter=k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[6] - jobs[2] <= 12, jobs
+    assert any("Join" in p for p in plans)
+    for p in plans:
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p

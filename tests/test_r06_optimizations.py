@@ -56,6 +56,9 @@ def test_gen_batch_empty_batch():
 
 def test_dist_dense_rank_matches_window(spark):
     rows = [(i, (i * 7919) % 23, (i * 104729) % 5) for i in range(400)]
+    # NULL keys in either column: dense_rank ranks them (NULLS FIRST), so
+    # the per-partition offsets must count them too
+    rows += [(400 + i, None if i % 2 else i % 3, None if i % 3 else 1) for i in range(12)]
     df = spark.createDataFrame(rows, "pos long, r long, r2 long")
     want = df.select(
         "pos",

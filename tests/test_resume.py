@@ -107,6 +107,34 @@ def test_pagerank_resume_rejects_mismatched_params(spark, tmp_path):
         pagerank(e, tol=1e-10, harness=h3, damping=0.5)
 
 
+def test_pagerank_resume_rederives_dangling_mass(spark, tmp_path):
+    """Each step reads the dangling mass observed when the previous state
+    was checkpointed; a resumed run re-derives it from the resumed
+    state, so 3 iterations then a resume to 8 equal 8 uninterrupted
+    iterations."""
+    # a cycle-rich core plus dangling sinks 100..103
+    e = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 30) for i in range(30)]
+        + [(i, 100 + i % 4) for i in range(0, 30, 3)],
+        "src long, dst long",
+    )
+    want = {r.vertex: r.rank for r in pagerank(e, tol=0.0, max_iter=8).collect()}
+
+    root = str(tmp_path / "pr_dang")
+    h1 = SuperstepHarness(spark, root, algo="pagerank", run_id="r1", interval=1)
+    pagerank(e, tol=0.0, max_iter=3, harness=h1)
+    h2 = SuperstepHarness(spark, root, algo="pagerank", run_id="r2", interval=1)
+    got = {
+        r.vertex: r.rank
+        for r in pagerank(e, tol=0.0, max_iter=8, harness=h2).collect()
+    }
+    assert got.keys() == want.keys()
+    for v in want:
+        assert got[v] == pytest.approx(want[v], rel=1e-12, abs=0.0)
+    r2 = h2.lineage().filter(F.col("run_id") == "r2")
+    assert r2.agg(F.min("superstep")).first()[0] == 3
+
+
 def test_lpa_resumes_from_checkpoint(spark, tmp_path):
     """LPA resume replays the identical synchronous round sequence:
     a run killed by a low max_iter cap, resumed under a fresh harness,
