@@ -131,48 +131,6 @@ pr{k} AS MATERIALIZED (SELECT v.vertex, {update(k)} AS r
     return pre + "".join(steps)
 
 
-def _hits_sql(iters: int) -> str:
-    """Fixed-iteration HITS as chained CTEs: authority from previous
-    hub, L2-normalize, hub from the NEW authority, L2-normalize —
-    the same deterministic sequence as ccl_spark.hits."""
-    pre = f"""
-WITH
-e AS MATERIALIZED ({_EDGES_SQL}),
-verts AS MATERIALIZED (SELECT DISTINCT v AS vertex FROM
-          (SELECT src AS v FROM e UNION SELECT dst FROM e)),
-h0 AS MATERIALIZED (SELECT vertex, 1.0 AS s FROM verts)
-"""
-    steps = []
-    for k in range(1, iters + 1):
-        steps.append(
-            f""",
-ar{k} AS (SELECT e.dst AS vertex, SUM(h.s) AS s FROM e
-          JOIN h{k - 1} h ON h.vertex = e.src GROUP BY e.dst),
-af{k} AS (SELECT v.vertex, COALESCE(r.s, 0) AS s
-          FROM verts v LEFT JOIN ar{k} r USING (vertex)),
-an{k} AS (SELECT SQRT(SUM(s * s)) AS n FROM af{k}),
-a{k} AS MATERIALIZED (SELECT vertex,
-       CASE WHEN (SELECT n FROM an{k}) > 0
-            THEN s / (SELECT n FROM an{k}) ELSE 0.0 END AS s FROM af{k}),
-hr{k} AS (SELECT e.src AS vertex, SUM(a.s) AS s FROM e
-          JOIN a{k} a ON a.vertex = e.dst GROUP BY e.src),
-hf{k} AS (SELECT v.vertex, COALESCE(r.s, 0) AS s
-          FROM verts v LEFT JOIN hr{k} r USING (vertex)),
-hn{k} AS (SELECT SQRT(SUM(s * s)) AS n FROM hf{k}),
-h{k} AS MATERIALIZED (SELECT vertex,
-       CASE WHEN (SELECT n FROM hn{k}) > 0
-            THEN s / (SELECT n FROM hn{k}) ELSE 0.0 END AS s FROM hf{k})"""
-        )
-    return (
-        pre
-        + "".join(steps)
-        + f"""
-SELECT h.vertex, ROUND(h.s, 6) AS hub, ROUND(a.s, 6) AS authority
-FROM h{iters} h JOIN a{iters} a USING (vertex)
-"""
-    )
-
-
 def _kcore_sql(k: int, rounds: int) -> str:
     """Iterative k-core peel unrolled as chained CTEs (idempotent once
     the fixpoint is reached, so rounds only needs to exceed the peel
@@ -579,21 +537,6 @@ SELECT seed, vertex, rank FROM (
     )
 
 
-def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs & authorities, fixed 6 iterations (chained-CTE
-    oracle replays the identical normalize-after-each-half-step
-    sequence; 6 rounds exercise the same code path as 10 at ~60% of
-    the gate's costliest query — gate-budget discipline)."""
-    from ccl_spark.hits import hits
-
-    out = hits(_edges_small(spark, sf_dir), max_iter=6)
-    return out.select(
-        "vertex",
-        F.round("hub", 6).alias("hub"),
-        F.round("authority", 6).alias("authority"),
-    )
-
-
 def q_salted_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted in-degree (skew machinery, edges.py): must
     equal a plain GROUP BY — which is exactly the oracle."""
@@ -678,56 +621,6 @@ _EDGES_QUAD_SQL = (
     "SELECT DISTINCT CAST(c_custkey % 100 AS BIGINT) AS src, "
     "CAST((c_custkey * c_custkey + 1) % 100 AS BIGINT) AS dst FROM customer"
 )
-
-
-# SCC labels of the quadratic-map graph, shared by q_scc and q_bowtie
-# (bowtie composes ON TOP of SCC; recomputing the multi-phase fixpoint
-# per query doubled the gate's SCC cost — gate-budget discipline)
-_SCC_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _quad_scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ccl_spark.scc import strongly_connected_components
-
-    key = (id(spark), sf_dir)
-    if key not in _SCC_MEMO:
-        _SCC_MEMO[key] = strongly_connected_components(
-            _edges_quad(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _SCC_MEMO[key]
-
-
-def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strongly connected components (web bow-tie core) of the
-    DIRECTED quadratic-map graph (functional graph: tree tails feeding
-    cycles, so SCCs are the cycles + singletons). Oracle = DuckDB
-    transitive closure with mutual-reachability min labels — a fully
-    independent SCC definition."""
-    return _quad_scc_labels(spark, sf_dir).select("vertex", "component")
-
-
-def q_bowtie(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bow-tie decomposition (core / in / out / other) of the directed
-    quadratic-map graph; oracle derives the same regions from the
-    transitive closure. Reuses the memoized SCC labels (bowtie's
-    ``labels`` parameter — the precomputed-labels pipeline shape)."""
-    from ccl_spark.scc import bowtie
-
-    e = _edges_quad(spark, sf_dir)
-    return bowtie(e, labels=_quad_scc_labels(spark, sf_dir)).select("vertex", "region")
-
-
-def q_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCC condensation DAG of the quadratic-map graph with
-    longest-path topological levels (level 0 = sources); reuses the
-    memoized SCC labels, so the gate pays only the O(#components)
-    level fixpoint. Oracle = the scc closure oracle extended with a
-    recursive path enumeration (safe: functional-graph condensations
-    are in-trees, so path count is linear)."""
-    from ccl_spark.scc import condensation_levels
-
-    e = _edges_quad(spark, sf_dir)
-    return condensation_levels(e, labels=_quad_scc_labels(spark, sf_dir))
 
 
 def q_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2160,63 +2053,6 @@ def q_corpus_cc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_vertices"))
         .orderBy(F.desc("n_vertices"), F.asc("component"))
         .limit(5)
-    )
-
-
-def q_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SALSA hub/authority scores (3 power iterations of the bipartite
-    random-walk chains) on the corpus graph, top-20 authorities."""
-    from ccl_spark.hits import salsa
-
-    e = _corpus_edges(spark, 1000)
-    _dump_edges(spark, 1000)
-    return (
-        salsa(e, max_iter=3)
-        .orderBy(F.desc("authority"), F.asc("vertex"))
-        .limit(20)
-    )
-
-
-def _salsa_sql(iters: int, k: int) -> str:
-    """Both SALSA chains unrolled: per iteration one degree-weighted
-    back(: in-edge) join and one forward(: out-edge) join."""
-    src = f"'{_ORACLE_DIR}/corpus_edges_1000.parquet'"
-    parts = [
-        f"""
-e AS MATERIALIZED (SELECT DISTINCT src AS s, dst AS d FROM {src}
-                   WHERE src <> dst),
-od AS MATERIALIZED (SELECT s, COUNT(*) AS od FROM e GROUP BY s),
-idg AS MATERIALIZED (SELECT d, COUNT(*) AS idg FROM e GROUP BY d),
-a0 AS (SELECT d AS v, CAST(1.0 AS DOUBLE) AS a FROM idg),
-h0 AS (SELECT s AS v, CAST(1.0 AS DOUBLE) AS h FROM od)"""
-    ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f"""
-bk{t} AS (SELECT e.s, SUM(p.a / idg.idg) AS m
-         FROM e JOIN idg ON idg.d = e.d JOIN a{t - 1} p ON p.v = e.d
-         GROUP BY e.s),
-a{t} AS MATERIALIZED (SELECT e.d AS v, SUM(b.m / od.od) AS a
-         FROM e JOIN od ON od.s = e.s JOIN bk{t} b ON b.s = e.s
-         GROUP BY e.d),
-fw{t} AS (SELECT e.d, SUM(p.h / od.od) AS m
-         FROM e JOIN od ON od.s = e.s JOIN h{t - 1} p ON p.v = e.s
-         GROUP BY e.d),
-h{t} AS MATERIALIZED (SELECT e.s AS v, SUM(f.m / idg.idg) AS h
-         FROM e JOIN idg ON idg.d = e.d JOIN fw{t} f ON f.d = e.d
-         GROUP BY e.s)"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f""",
-an AS (SELECT v, a / (SELECT COUNT(*) FROM idg) AS a FROM a{iters}),
-hn AS (SELECT v, h / (SELECT COUNT(*) FROM od) AS h FROM h{iters})
-SELECT COALESCE(an.v, hn.v) AS vertex,
-       ROUND(COALESCE(an.a, 0.0), 6) AS authority,
-       ROUND(COALESCE(hn.h, 0.0), 6) AS hub
-FROM an FULL JOIN hn ON an.v = hn.v
-ORDER BY ROUND(COALESCE(an.a, 0.0), 6) DESC, vertex LIMIT {k}"""
     )
 
 
@@ -7018,7 +6854,7 @@ LEFT JOIN recip r ON r.host = t.host
 def q_tie_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-edge embeddedness (common-neighbor count) on the small
     graph — 0 rows are the local bridges."""
-    from ccl_spark.edges import edge_embeddedness
+    from ccl_spark.graphstats import edge_embeddedness
 
     return edge_embeddedness(_edges_small(spark, sf_dir))
 
@@ -7283,16 +7119,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pagerank": q_pagerank,
         "pagerank_seeded": q_pagerank_seeded,
         "spam_mass": q_spam_mass,
-        "hits": q_hits,
         "degrees_topk": q_degrees_topk,
         "salted_degrees": q_salted_degrees,
         "url_canon": q_url_canon,
         "triangles": q_triangles,
         "triangles_per_vertex": q_triangles_per_vertex,
         "kcore": q_kcore,
-        "scc": q_scc,
-        "condensation": q_condensation,
-        "bowtie": q_bowtie,
         "clustering": q_clustering,
         "ages": q_ages,
         "eol": q_eol,
@@ -7402,7 +7234,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dir_assort": q_dir_assort,
         "cocitation": q_cocitation,
         "coupling": q_coupling,
-        "salsa": q_salsa,
         "frontier": q_frontier,
         "inverted_index": q_inverted_index,
         "neighbor_sample": q_neighbor_sample,
@@ -7464,7 +7295,6 @@ HAVING COUNT(*) >= 3
         "pagerank_seeded": _pagerank_sql(PPR_ITERS, seeds=PPR_SEEDS),
         "spam_mass": _spam_mass_sql(PPR_ITERS, PPR_SEEDS),
         "ppr_batch": _ppr_batch_sql(8, PPR_SEEDS, 5),
-        "hits": _hits_sql(6),
         "salted_degrees": f"""
 WITH e AS ({_EDGES_SQL})
 SELECT dst AS vertex, COUNT(*) AS in_deg FROM e GROUP BY dst
@@ -7516,25 +7346,6 @@ SELECT verts.vertex, CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_triangles
 FROM verts LEFT JOIN cnt ON cnt.vertex = verts.vertex
 """,
         "kcore": _kcore_sql(2, 16),
-        "scc": f"""
-WITH RECURSIVE
-e AS (SELECT src, dst FROM ({_EDGES_QUAD_SQL}) WHERE src <> dst),
-verts AS (SELECT DISTINCT w AS vertex FROM
-          (SELECT src AS w FROM ({_EDGES_QUAD_SQL}) UNION SELECT dst FROM ({_EDGES_QUAD_SQL}))),
-reach(a, b) AS (
-    SELECT src, dst FROM e
-    UNION
-    SELECT r.a, e.dst FROM reach r JOIN e ON e.src = r.b
-),
-mutual AS (
-    SELECT r1.a AS u, r1.b AS v
-    FROM reach r1 JOIN reach r2 ON r2.a = r1.b AND r2.b = r1.a
-)
-SELECT v.vertex,
-       LEAST(v.vertex, COALESCE(MIN(m.v), v.vertex)) AS component
-FROM verts v LEFT JOIN mutual m ON m.u = v.vertex
-GROUP BY v.vertex
-""",
         "mst": f"SELECT u, v, w FROM '{_ORACLE_DIR}/pinned_mst_sf001.parquet'",
         "single_linkage": f"""
 WITH RECURSIVE
@@ -7552,75 +7363,6 @@ SELECT v.vertex,
        LEAST(v.vertex, COALESCE(MIN(r.b), v.vertex)) AS cluster
 FROM verts v LEFT JOIN reach r ON r.a = v.vertex
 GROUP BY v.vertex""",
-        "condensation": f"""
-WITH RECURSIVE
-e AS (SELECT src, dst FROM ({_EDGES_QUAD_SQL}) WHERE src <> dst),
-verts AS (SELECT DISTINCT w AS vertex FROM
-          (SELECT src AS w FROM ({_EDGES_QUAD_SQL}) UNION SELECT dst FROM ({_EDGES_QUAD_SQL}))),
-reach(a, b) AS (
-    SELECT src, dst FROM e
-    UNION
-    SELECT r.a, e.dst FROM reach r JOIN e ON e.src = r.b
-),
-mutual AS (
-    SELECT r1.a AS u, r1.b AS v
-    FROM reach r1 JOIN reach r2 ON r2.a = r1.b AND r2.b = r1.a
-),
-lab AS MATERIALIZED (
-    SELECT v.vertex, LEAST(v.vertex, COALESCE(MIN(m.v), v.vertex)) AS component
-    FROM verts v LEFT JOIN mutual m ON m.u = v.vertex
-    GROUP BY v.vertex
-),
-ce AS MATERIALIZED (
-    SELECT DISTINCT l1.component AS s, l2.component AS d
-    FROM e JOIN lab l1 ON l1.vertex = e.src JOIN lab l2 ON l2.vertex = e.dst
-    WHERE l1.component <> l2.component
-),
-comps AS (SELECT DISTINCT component FROM lab),
-paths(c, len) AS (
-    SELECT component, 0 FROM comps
-    WHERE component NOT IN (SELECT d FROM ce)
-    UNION ALL
-    SELECT ce.d, p.len + 1 FROM paths p JOIN ce ON ce.s = p.c
-)
-SELECT c AS component, CAST(MAX(len) AS BIGINT) AS level
-FROM paths GROUP BY c
-""",
-        "bowtie": f"""
-WITH RECURSIVE
-e AS (SELECT src, dst FROM ({_EDGES_QUAD_SQL}) WHERE src <> dst),
-verts AS (SELECT DISTINCT w AS vertex FROM
-          (SELECT src AS w FROM ({_EDGES_QUAD_SQL}) UNION SELECT dst FROM ({_EDGES_QUAD_SQL}))),
-reach(a, b) AS (
-    SELECT src, dst FROM e
-    UNION
-    SELECT r.a, e.dst FROM reach r JOIN e ON e.src = r.b
-),
-mutual AS (
-    SELECT r1.a AS u, r1.b AS v
-    FROM reach r1 JOIN reach r2 ON r2.a = r1.b AND r2.b = r1.a
-),
-lab AS MATERIALIZED (
-    SELECT v.vertex, LEAST(v.vertex, COALESCE(MIN(m.v), v.vertex)) AS component
-    FROM verts v LEFT JOIN mutual m ON m.u = v.vertex
-    GROUP BY v.vertex
-),
-core_sel AS (
-    SELECT component FROM (SELECT component, COUNT(*) AS n FROM lab GROUP BY component)
-    ORDER BY n DESC, component ASC LIMIT 1
-),
-corev AS MATERIALIZED (
-    SELECT vertex FROM lab WHERE component = (SELECT component FROM core_sel)
-)
-SELECT l.vertex,
-       CASE WHEN l.component = (SELECT component FROM core_sel) THEN 'core'
-            WHEN EXISTS (SELECT 1 FROM reach r JOIN corev c ON r.b = c.vertex
-                         WHERE r.a = l.vertex) THEN 'in'
-            WHEN EXISTS (SELECT 1 FROM reach r JOIN corev c ON r.a = c.vertex
-                         WHERE r.b = l.vertex) THEN 'out'
-            ELSE 'other' END AS region
-FROM lab l
-""",
         "clustering": f"""
 WITH e AS ({_EDGES_TRI_SQL}),
 cu AS (SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
@@ -8277,7 +8019,6 @@ SELECT n_rich, n_edges_rich,
        ROUND(2.0 * n_edges_rich / (n_rich * (n_rich - 1)), 6) AS phi
 FROM nr, er
 """,
-        "salsa": _salsa_sql(3, 20),
         "hll": _hll_sql(6),
         "kmv_jaccard": _KMV_JACCARD_SQL,
         "hll_groups": _hll_groups_sql(6),

@@ -19,13 +19,11 @@ web-scale link graphs, built on the Spark DataFrame API:
 - ``edges``      edge-table builder (dedup, salt, degrees, CSR blocks),
                  URL canonicalization, domain-blocklist filtering
 - ``superstep``  checkpoint / lineage / resume harness for iterative jobs
-- ``scc``        strongly connected components + bow-tie decomposition
 - ``kcore``      k-core peeling
-- ``hits``       HITS hubs/authorities + SALSA random-walk variant
 - ``betweenness`` pivot-sampled Brandes betweenness / harmonic / closeness
 - ``neighborhood`` exact neighborhood function, effective diameter, HyperBall
 - ``graphstats`` reciprocity, assortativity, link prediction + offline eval (AA/RA/Jaccard,
-                 co-citation, coupling), fused LTR-style feature table,
+                 co-citation, coupling), edge embeddedness, fused LTR-style feature table,
                  modularity + greedy Louvain moves,
                  conductance, PPR sweep cut, attack robustness, bond
                  percolation, WL refinement, densest-subgraph peel,

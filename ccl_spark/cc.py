@@ -280,7 +280,7 @@ def connected_components(
     def local_finish(n: int) -> bool:
         return 0 < n <= local_finish_threshold
 
-    def round_plan(cur: DataFrame, _k: int, prev: dict) -> DataFrame:
+    def round_plan(cur: DataFrame, prev: dict) -> DataFrame:
         if local_finish(prev["n"]):
             # subcritical finish, two-level: contract in parallel
             # chunks first (each task solves its slice and emits a

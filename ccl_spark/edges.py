@@ -13,10 +13,9 @@ reference never materializes — SURVEY.md §1). Layout per FIXTURES.md:
   downstream two-phase aggregation over hub vertices can group by
   (src, salt) first and by src second.
 - iterative algorithms checkpoint their own edge side once per run
-  and let each materialized job broadcast or exchange it once
-  (ReusedExchange shares an exchange across fused iterations); on
-  real storage the co-located layout is an Iceberg bucket(src)
-  partition spec + sorted-by-src data files.
+  and let each materialized step broadcast or exchange it; on real
+  storage the co-located layout is an Iceberg bucket(src) partition
+  spec + sorted-by-src data files.
 """
 
 from __future__ import annotations
@@ -434,38 +433,4 @@ def host_spam_signals(
                 6,
             ).alias("reciprocal_ratio"),
         )
-    )
-
-
-def edge_embeddedness(
-    edges: DataFrame,
-    max_degree: int = 10_000,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Per-edge embeddedness (Granovetter tie strength): the number of
-    common neighbors of an edge's endpoints on the symmetrized graph —
-    0 marks a local bridge (the weak tie that carries novel
-    information), high values mark densely embedded intra-community
-    ties.
-
-    Same capped wedge join as the link-prediction family, but
-    INTERSECTED with the edge set (semi-join) instead of
-    anti-joined — so the output is one row per existing undirected
-    edge.  Edges whose wedge evidence was capped away report 0, never
-    disappear.  Returns ``(u, v, embeddedness)``.
-    """
-    from ccl_spark.graphstats import _symmetrized, _wedge_scores
-
-    und = _symmetrized(edges, src, dst)
-    canon = und.filter(F.col("s") < F.col("d")).select(
-        F.col("s").alias("u"), F.col("d").alias("v")
-    )
-    common = _wedge_scores(und, F.lit(1.0), max_degree).select(
-        "u", "v", F.col("score").cast("long").alias("embeddedness")
-    )
-    return canon.join(common, ["u", "v"], "left").select(
-        "u",
-        "v",
-        F.coalesce("embeddedness", F.lit(0)).cast("long").alias("embeddedness"),
     )

@@ -505,6 +505,38 @@ def jaccard_links(
     return _top_nonadjacent(scores, und, k)
 
 
+def edge_embeddedness(
+    edges: DataFrame,
+    max_degree: int = 10_000,
+    src: str = "src",
+    dst: str = "dst",
+) -> DataFrame:
+    """Per-edge embeddedness (Granovetter tie strength): the number of
+    common neighbors of an edge's endpoints on the symmetrized graph —
+    0 marks a local bridge (the weak tie that carries novel
+    information), high values mark densely embedded intra-community
+    ties.
+
+    Same capped wedge join as the link-prediction family, but
+    INTERSECTED with the edge set (semi-join) instead of
+    anti-joined — so the output is one row per existing undirected
+    edge.  Edges whose wedge evidence was capped away report 0, never
+    disappear.  Returns ``(u, v, embeddedness)``.
+    """
+    und = _symmetrized(edges, src, dst)
+    canon = und.filter(F.col("s") < F.col("d")).select(
+        F.col("s").alias("u"), F.col("d").alias("v")
+    )
+    common = _wedge_scores(und, F.lit(1.0), max_degree).select(
+        "u", "v", F.col("score").cast("long").alias("embeddedness")
+    )
+    return canon.join(common, ["u", "v"], "left").select(
+        "u",
+        "v",
+        F.coalesce("embeddedness", F.lit(0)).cast("long").alias("embeddedness"),
+    )
+
+
 def butterflies(
     edges: DataFrame,
     max_degree: int = 10_000,

@@ -9,11 +9,9 @@ sequential numbering forced is kept here by construction.
 Per superstep: one join (labels onto the undirected neighbor table) +
 one (u, label) count aggregation + one per-vertex min_by argmax — all
 JVM-side hash aggregates with map-side partials, no sort. The
-neighbor table is checkpointed once for the run; each materialized
-block re-exchanges it once, shared across the block's fused rounds by
-ReusedExchange. Rounds run in the shared superstep loop
-(superstep.run_supersteps): one eager checkpoint per block, with the
-changed-label count observed in the same job.
+neighbor table is checkpointed once for the run. Rounds run in the
+shared superstep loop (superstep.run_supersteps): one eager checkpoint
+per round, with the changed-label count observed in the same job.
 """
 
 from __future__ import annotations
@@ -23,40 +21,38 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .superstep import SuperstepHarness, run_supersteps
 
 
-def _rounds(nbrs: DataFrame, score: Column):
-    """Block plan of k synchronous rounds over the neighbor table
+def _round(nbrs: DataFrame, score: Column):
+    """Step plan of one synchronous round over the neighbor table
     ``(u, v[, w])``: every vertex adopts the label of its neighbors
     with the highest ``score`` aggregate (ties: smallest label)."""
 
-    def rounds(cur: DataFrame, k: int, _prev: dict) -> DataFrame:
-        for _ in range(k):
-            counts = (
-                nbrs.join(cur, nbrs.v == cur.vertex)
-                .groupBy("u", "label")
-                .agg(score.alias("cnt"))
-            )
-            # argmax by (cnt DESC, label ASC) as a hash aggregate with
-            # map-side partials instead of a row_number window — same
-            # deterministic winner, no per-round sort (negating cnt, not
-            # label: label ids are xxhash64 longs where Long.MIN_VALUE
-            # would overflow under ANSI negation)
-            best = counts.groupBy(F.col("u").alias("vertex")).agg(
-                F.min_by("label", F.struct((-F.col("cnt")).alias("nc"), "label"))
-                .alias("new_label")
-            )
-            cur = cur.join(best, "vertex", "left").select(
-                "vertex",
-                F.coalesce("new_label", "label").alias("label"),
-                (F.coalesce("new_label", "label") != F.col("label")).alias("chg"),
-            )
-        return cur
+    def round_plan(cur: DataFrame, _prev: dict) -> DataFrame:
+        counts = (
+            nbrs.join(cur, nbrs.v == cur.vertex)
+            .groupBy("u", "label")
+            .agg(score.alias("cnt"))
+        )
+        # argmax by (cnt DESC, label ASC) as a hash aggregate with
+        # map-side partials instead of a row_number window — same
+        # deterministic winner, no per-round sort (negating cnt, not
+        # label: label ids are xxhash64 longs where Long.MIN_VALUE
+        # would overflow under ANSI negation)
+        best = counts.groupBy(F.col("u").alias("vertex")).agg(
+            F.min_by("label", F.struct((-F.col("cnt")).alias("nc"), "label"))
+            .alias("new_label")
+        )
+        return cur.join(best, "vertex", "left").select(
+            "vertex",
+            F.coalesce("new_label", "label").alias("label"),
+            (F.coalesce("new_label", "label") != F.col("label")).alias("chg"),
+        )
 
-    return rounds
+    return round_plan
 
 
 def _until_no_change() -> dict:
     """Loop settings both variants share: labels in, labels out, stop
-    at the first block that changes no label."""
+    at the first round that changes no label."""
     return dict(
         columns=("vertex", "label"),
         metrics=[F.count(F.when(F.col("chg"), 1)).alias("changed")],
@@ -70,25 +66,15 @@ def label_propagation(
     dst: str = "dst",
     max_iter: int = 10,
     vertices: DataFrame | None = None,
-    rounds_per_check: int = 2,
     harness: SuperstepHarness | None = None,
 ) -> DataFrame:
     """Return ``(vertex long, label long)`` after at most ``max_iter``
     synchronous rounds (stops early when no label changes).
 
-    ``rounds_per_check`` fuses k rounds into one lazy plan per
-    materialization + changed-count check (blocks always sum to
-    ``max_iter``, and stopping is only ever delayed past a fixpoint,
-    where extra rounds are identity). Default 2: measured best at BOTH
-    341k edges (5.4s vs 6.1s at k=3) and 6.8M edges (25.0s vs 28.8s) —
-    each fused round re-references the labels via join+window, so k=3's
-    recompute depth already costs more than the saved check job.
-
-    ``harness`` checkpoints the labels and resumes mid-algorithm:
-    synchronous rounds are deterministic, so resuming from round t
-    replays the identical label sequence a full run produces. Only the
-    edge set is pinned — ``rounds_per_check`` never changes the
-    sequence."""
+    ``harness`` checkpoints the labels every ``interval``-th round and
+    resumes mid-algorithm: synchronous rounds are deterministic, so
+    resuming from round t replays the identical label sequence a full
+    run produces. Only the edge set is pinned."""
     pairs = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
@@ -108,8 +94,7 @@ def label_propagation(
     return run_supersteps(
         "lpa",
         verts.select("vertex", F.col("vertex").alias("label")),
-        _rounds(nbrs, F.count(F.lit(1))),
-        per_block=max(int(rounds_per_check), 1),
+        _round(nbrs, F.count(F.lit(1))),
         max_iter=max_iter,
         harness=harness,
         pin=(pairs, ("u", "v"), ""),
@@ -137,8 +122,8 @@ def label_spreading(
     identity).
 
     Per round: one neighbor join against the O(labeled) state + one
-    (vertex, label) count + one row_number window — the LPA superstep
-    with a seed override, all JVM-side."""
+    (vertex, label) count + one min_by argmax aggregate — the LPA
+    superstep with a seed override, all JVM-side."""
     und = (
         edges.select(
             F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
@@ -194,7 +179,8 @@ def weighted_label_propagation(
     the chained-CTE oracle at any parallelism (the SSSP/louvain
     integer-exactness discipline).  Same per-round shape as
     :func:`label_propagation`: one join onto the pinned neighbor
-    table + one aggregate + one window.  Stops early at a fixpoint
+    table + one count aggregate + one min_by argmax aggregate.  Stops
+    early at a fixpoint
     (further rounds are identity, so a fixed-iteration oracle
     agrees).
     """
@@ -223,7 +209,7 @@ def weighted_label_propagation(
     return run_supersteps(
         "weighted_lpa",
         verts.select("vertex", F.col("vertex").alias("label")),
-        _rounds(nbrs, F.sum("w")),
+        _round(nbrs, F.sum("w")),
         max_iter=max_iter,
         **_until_no_change(),
     )

@@ -202,7 +202,7 @@ def pagerank(
         """The self-row's value of state column ``c``."""
         return F.max(F.when(is_self, F.col(c)))
 
-    def step(s: DataFrame, _k: int, prev: dict) -> DataFrame:
+    def step(s: DataFrame, prev: dict) -> DataFrame:
         # prev["dang"] is the dangling mass of ``s``, observed when ``s``
         # was checkpointed. Uniform mode spreads it as dang / n; seeded
         # mode multiplies it by the per-vertex teleport weight.

@@ -4,10 +4,10 @@ checkpoint / lineage / resume harness.
 The reference propagates its label translations in one loop over the
 stack (ccl_marker_stack.py:1645-1685) and tracked per-stage wall time
 in a global stopwatch, with no resume story — a crash re-ran the whole
-stack. Here ``run_supersteps`` is that one loop for CC, PageRank, LPA
-and HITS; each algorithm supplies only its step plan. The loop owns
-resume, input pinning, fused blocks of k steps, one materialization
-per block, checkpointing, the stop test and the end-of-budget outcome.
+stack. Here ``run_supersteps`` is that one loop for CC, PageRank and
+LPA; each algorithm supplies only its step plan. The loop owns resume,
+input pinning, one materialization per step, checkpointing, the stop
+test and the end-of-budget outcome.
 
 Every k-th superstep (``SuperstepHarness.interval``) persists the
 iteration state to parquet together with per-partition lineage rows
@@ -156,11 +156,10 @@ def pin_input_signature(
 def run_supersteps(
     what: str,
     start: DataFrame,
-    block: Callable[[DataFrame, int, dict], DataFrame],
+    block: Callable[[DataFrame, dict], DataFrame],
     *,
     columns: Sequence[str],
     max_iter: int,
-    per_block: int = 1,
     metrics: Sequence[Column] = (),
     start_metrics: Sequence[Column] = (),
     stop: Callable[[dict, dict], bool] | None = None,
@@ -168,24 +167,23 @@ def run_supersteps(
     pin: tuple[DataFrame, Sequence[str], str] | None = None,
     exhausted: str | None = None,
 ) -> DataFrame:
-    """Iterate ``state -> block(state, k, prev)`` from ``start`` for up
+    """Iterate ``state -> block(state, prev)`` from ``start`` for up
     to ``max_iter`` steps and return the final state (``columns``).
 
-    - ``block`` builds the lazy plan of k fused steps (k =
-      ``per_block``, less in the last block, so blocks sum to
-      ``max_iter``); ``prev`` holds the previous block's metrics. It
-      may carry extra columns that ``metrics`` read; they are dropped
-      before the checkpoint.
-    - Each block is materialized once (see ``materialize``) with the
+    - ``block`` builds the lazy plan of one step; ``prev`` holds the
+      previous step's metrics. It may carry extra columns that
+      ``metrics`` read; they are dropped before the checkpoint.
+    - Each step is materialized once (see ``materialize``) with the
       aggregate ``metrics`` observed in the same job; ``stop(m, prev)``
       on the result ends the loop. ``start_metrics``, when given, are
       observed on a materialization of the start state; a start state
       observed to hold no rows (``n == 0``) is already a fixpoint.
     - With a ``harness``: resume from its newest complete checkpoint,
       pin the input through ``pin`` = (rows, signature columns,
-      parameter string), and record every block's state and lineage.
-      Lineage ``changed`` and ``delta`` come from the metrics of those
-      names (-1 / 0.0 when absent).
+      parameter string), and record each step's state and lineage
+      (step n, counted from 0, is superstep n; the harness keeps every
+      ``interval``-th). Lineage ``changed`` and ``delta`` come from the
+      metrics of those names (-1 / 0.0 when absent).
     - Running out of ``max_iter`` without ``stop`` raises
       ``RuntimeError(exhausted)`` when given, else returns the state.
     """
@@ -203,17 +201,16 @@ def run_supersteps(
         return state
     while it < max_iter:
         t0 = harness.timer() if harness is not None else None
-        k = min(per_block, max_iter - it)
-        nxt, m = materialize(block(state, k, prev), metrics, columns)
-        it += k
+        nxt, m = materialize(block(state, prev), metrics, columns)
         if harness is not None:
             nxt = harness.record(
-                superstep=it - 1,
+                superstep=it,
                 df=nxt,
                 changed=m.get("changed", -1),
                 delta=m.get("delta") or 0.0,
                 timer=t0,
             )
+        it += 1
         state = nxt
         if stop is not None and stop(m, prev):
             return state

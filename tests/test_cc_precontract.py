@@ -21,7 +21,7 @@ def test_precontract_equals_plain_on_corpus(spark):
     )
 
 
-def test_rounds_per_check_and_broadcast_equal(spark):
+def test_broadcast_threshold_and_local_finish_equal(spark):
     e = page_edges(generate_pages(spark, 300, seed=21)).repartition(7)
     base = _labels(
         connected_components(e, pre_contract=False, local_finish_threshold=0)

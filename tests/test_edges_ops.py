@@ -107,7 +107,7 @@ def test_host_spam_signals_hand_computed(spark):
 
 
 def test_edge_embeddedness_bridges_and_triangles(spark):
-    from ccl_spark.edges import edge_embeddedness
+    from ccl_spark.graphstats import edge_embeddedness
 
     # two triangles joined by a bridge 2-3
     raw = [(0, 1), (1, 2), (2, 0), (3, 4), (4, 5), (5, 3), (2, 3)]

@@ -146,35 +146,6 @@ def test_personalized_pagerank(spark):
         assert pr[v] == pytest.approx(r[idx[v]], abs=1e-9), v
 
 
-def test_hits_numpy_oracle(spark):
-    import numpy as np
-
-    from ccl_spark.hits import hits
-
-    edges = [(0, 2), (0, 3), (1, 2), (1, 3), (2, 4), (4, 0)]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.vertex: (r.hub, r.authority) for r in hits(e, max_iter=8).collect()}
-
-    verts = sorted({v for p in edges for v in p})
-    idx = {v: i for i, v in enumerate(verts)}
-    A = np.zeros((len(verts), len(verts)))
-    for u, v in edges:
-        A[idx[u], idx[v]] = 1.0
-    h = np.ones(len(verts))
-    for _ in range(8):
-        a = A.T @ h
-        a = a / np.linalg.norm(a) if np.linalg.norm(a) > 0 else a
-        h = A @ a
-        h = h / np.linalg.norm(h) if np.linalg.norm(h) > 0 else h
-    for v in verts:
-        assert got[v][0] == pytest.approx(h[idx[v]], abs=1e-9), ("hub", v)
-        assert got[v][1] == pytest.approx(a[idx[v]], abs=1e-9), ("auth", v)
-    # structure: 0 and 1 are the hubs (point at both authorities 2,3)
-    assert got[0][0] == pytest.approx(got[1][0], abs=1e-9)
-    assert got[2][1] == pytest.approx(got[3][1], abs=1e-9)
-    assert got[0][0] > got[2][0] and got[2][1] > got[0][1]
-
-
 def test_pagerank_incremental_fold_in(spark):
     """Incremental rank maintenance (verdict r4 #6): folding an edge
     batch into previously-converged ranks via warm_start converges to
@@ -341,78 +312,6 @@ def test_ktruss_rejects_small_k(spark):
     df = spark.createDataFrame([(0, 1)], "src long, dst long")
     with pytest.raises(ValueError):
         ktruss(df, k=2)
-
-
-def _py_salsa(edges, max_iter):
-    e = {(s, d) for s, d in edges if s != d}
-    od: dict[int, int] = {}
-    idg: dict[int, int] = {}
-    for s, d in e:
-        od[s] = od.get(s, 0) + 1
-        idg[d] = idg.get(d, 0) + 1
-    a = {k: 1.0 for k in idg}
-    for _ in range(max_iter):
-        m: dict[int, float] = {}
-        for s, d in e:
-            m[s] = m.get(s, 0.0) + a[d] / idg[d]
-        a2: dict[int, float] = {}
-        for s, d in e:
-            a2[d] = a2.get(d, 0.0) + m[s] / od[s]
-        a = a2
-    h = {k: 1.0 for k in od}
-    for _ in range(max_iter):
-        m = {}
-        for s, d in e:
-            m[d] = m.get(d, 0.0) + h[s] / od[s]
-        h2: dict[int, float] = {}
-        for s, d in e:
-            h2[s] = h2.get(s, 0.0) + m[d] / idg[d]
-        h = h2
-    na, nh = len(idg), len(od)
-    verts = set(a) | set(h)
-    return {
-        v: (round(a.get(v, 0.0) / na if v in a else 0.0, 6),
-            round(h.get(v, 0.0) / nh if v in h else 0.0, 6))
-        for v in verts
-    }
-
-
-def test_salsa_matches_python_replay(spark):
-    import random
-
-    from ccl_spark.hits import salsa
-
-    rng = random.Random(41)
-    edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(150)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["vertex"]: (r["authority"], r["hub"])
-        for r in salsa(df, max_iter=3).collect()
-    }
-    expect = _py_salsa(edges, 3)
-    assert set(got) == set(expect)
-    for v in expect:
-        assert got[v][0] == pytest.approx(expect[v][0], abs=1e-6)
-        assert got[v][1] == pytest.approx(expect[v][1], abs=1e-6)
-
-
-def test_salsa_mass_and_degree_proportionality(spark):
-    from ccl_spark.hits import salsa
-
-    # complete bipartite 2x3: chains mix in one step; authority mass
-    # uniform over the 3 targets, hub mass uniform over the 2 sources
-    edges = [(s, d) for s in (0, 1) for d in (10, 11, 12)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    rows = {r["vertex"]: r for r in salsa(df, max_iter=4).collect()}
-    for d in (10, 11, 12):
-        assert rows[d]["authority"] == pytest.approx(1 / 3, abs=1e-6)
-        assert rows[d]["hub"] == 0.0
-    for s in (0, 1):
-        assert rows[s]["hub"] == pytest.approx(1 / 2, abs=1e-6)
-        assert rows[s]["authority"] == 0.0
-    # L1 mass: authorities sum to 1, hubs sum to 1
-    assert sum(r["authority"] for r in rows.values()) == pytest.approx(1.0, abs=1e-5)
-    assert sum(r["hub"] for r in rows.values()) == pytest.approx(1.0, abs=1e-5)
 
 
 def test_katz_exact_small(spark):

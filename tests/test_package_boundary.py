@@ -5,12 +5,15 @@ imports count (lazy imports are where a stale reference hides until
 the one code path that needs it runs), so the scan walks the whole
 AST of every source file, not just its header.  ``__spark_entry__``'s
 two tables must also name the same queries, or a query runs without
-an oracle (or an oracle without its query).
+an oracle (or an oracle without its query).  And no module that
+ARCHITECTURE.md marks **keep** may import one marked **later slice**,
+or that slice could not be deleted without breaking the engine.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -86,3 +89,28 @@ def test_every_query_has_an_oracle():
     import __spark_entry__ as entry
 
     assert set(entry.queries()) == set(entry.oracle_sql())
+
+
+def _marks() -> dict[str, str]:
+    """{module: mark} from ARCHITECTURE.md's keep / delete table."""
+    rows = re.findall(
+        r"^\| `(\w+)` \| ([^|]+?) \|", (REPO / "ARCHITECTURE.md").read_text(), re.M
+    )
+    return dict(rows)
+
+
+def test_keep_modules_import_no_later_slice_module():
+    """``cli`` is exempt: its text subcommands go with ``dedup`` /
+    ``textops`` and its walks subcommand with ``walks``."""
+    marks = _marks()
+    modules = {p.stem for p in PKG.glob("*.py")} - {"__init__"}
+    assert modules <= set(marks), sorted(modules - set(marks))
+    later = {m for m, mark in marks.items() if mark == "later slice"}
+    bad = [
+        f"{mod}.py:{lineno} imports {dep}"
+        for mod, mark in sorted(marks.items())
+        if mark == "keep" and mod != "cli"
+        for lineno, dep, _ in _package_imports(PKG / f"{mod}.py")
+        if dep in later
+    ]
+    assert not bad, bad

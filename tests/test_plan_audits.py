@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ccl_spark.cc import connected_components
 from ccl_spark.datagen import generate_pages
 from ccl_spark.edges import page_edges
+from ccl_spark.lpa import label_propagation
 from ccl_spark.pagerank import pagerank
 
 
@@ -350,6 +351,16 @@ def test_lp_features_single_wedge_aggregate(spark):
     assert "BatchEvalPython" not in plan
 
 
+def _jobs_in_group(spark, group: str, run) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_pagerank_iteration_costs_at_most_three_jobs(spark, monkeypatch):
     """A PageRank iteration is one join of the augmented edge table with
     the rank state plus one aggregate, checkpointed with its metrics in
@@ -378,18 +389,33 @@ def test_pagerank_iteration_costs_at_most_three_jobs(spark, monkeypatch):
         F.col("id").alias("src"), (F.col("id") % 4 + 100).alias("dst")
     )
     e = core.unionByName(sinks)
-    sc = spark.sparkContext
-    jobs = {}
-    for k in (2, 6):
-        group = f"pagerank-jobs-{k}"
-        sc.setJobGroup(group, f"pagerank max_iter={k}")
-        try:
-            pagerank(e, tol=0.0, max_iter=k)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = {
+        k: _jobs_in_group(
+            spark, f"pagerank-jobs-{k}", lambda k=k: pagerank(e, tol=0.0, max_iter=k)
+        )
+        for k in (2, 6)
+    }
     assert jobs[6] - jobs[2] <= 12, jobs
     assert any("Join" in p for p in plans)
     for p in plans:
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p
+
+
+def test_lpa_round_job_count(spark):
+    """An LPA round is one superstep: its joins and aggregates plus the
+    checkpoint that carries the changed-label count measure 6 Spark
+    jobs, so 4 more rounds cost at most 24 more jobs. The input is a
+    40-vertex path built from a range (so the planner has a size
+    estimate); synchronous LPA swaps labels along a path and never
+    settles, so every one of the 6 rounds runs."""
+    path = spark.range(39).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    jobs = {
+        k: _jobs_in_group(
+            spark, f"lpa-jobs-{k}", lambda k=k: label_propagation(path, max_iter=k)
+        )
+        for k in (2, 6)
+    }
+    assert jobs[6] - jobs[2] <= 24, jobs

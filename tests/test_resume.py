@@ -135,127 +135,45 @@ def test_pagerank_resume_rederives_dangling_mass(spark, tmp_path):
     assert r2.agg(F.min("superstep")).first()[0] == 3
 
 
-def test_lpa_resumes_from_checkpoint(spark, tmp_path):
+def _committed_steps(root) -> list[int]:
+    """Supersteps under ``root`` whose state carries its commit marker."""
+    return sorted(
+        int(p.name.split("=", 1)[1])
+        for p in (root / "state").glob("step=*")
+        if (p / "_SUCCESS").exists()
+    )
+
+
+@pytest.mark.parametrize("interval", [1, 2])
+def test_lpa_resumes_from_checkpoint(spark, tmp_path, interval):
     """LPA resume replays the identical synchronous round sequence:
     a run killed by a low max_iter cap, resumed under a fresh harness,
-    must equal a single uninterrupted run."""
+    must equal a single uninterrupted run. Every round is one
+    superstep, so the harness commits exactly every ``interval``-th
+    round, an even interval included."""
     from ccl_spark.lpa import label_propagation
 
     pages = generate_pages(spark, 150, seed=13)
     e = page_edges(pages).cache()
-    full = {
-        r.vertex: r.label
-        for r in label_propagation(e, max_iter=8, rounds_per_check=1).collect()
-    }
+    full = {r.vertex: r.label for r in label_propagation(e, max_iter=8).collect()}
 
-    root = str(tmp_path / "lpa_run")
-    h1 = SuperstepHarness(spark, root, algo="lpa", run_id="r1", interval=1)
-    label_propagation(e, max_iter=2, rounds_per_check=1, harness=h1)  # partial
-    assert h1.lineage().agg(F.max("superstep")).first()[0] == 1
+    root = tmp_path / "lpa_run"
+    h1 = SuperstepHarness(spark, str(root), algo="lpa", run_id="r1", interval=interval)
+    label_propagation(e, max_iter=4, harness=h1)  # partial
+    assert _committed_steps(root) == list(range(0, 4, interval))
 
-    h2 = SuperstepHarness(spark, root, algo="lpa", run_id="r2", interval=1)
+    h2 = SuperstepHarness(spark, str(root), algo="lpa", run_id="r2", interval=interval)
     got = {
         r.vertex: r.label
-        for r in label_propagation(
-            e, max_iter=8, rounds_per_check=1, harness=h2
-        ).collect()
+        for r in label_propagation(e, max_iter=8, harness=h2).collect()
     }
     assert got == full
+    # this graph reaches its fixpoint in round 6 (superstep 5)
+    assert _committed_steps(root) == list(range(0, 6, interval))
     assert (
         h2.lineage().filter(F.col("run_id") == "r2").agg(F.min("superstep")).first()[0]
-        >= 2
+        == 4
     )
-
-
-def test_hits_resumes_from_checkpoint(spark, tmp_path):
-    """HITS resume: a run capped at 2 of 6 iterations, resumed under a
-    fresh harness, equals one uninterrupted 6-iteration run."""
-    from ccl_spark.hits import hits
-
-    pages = generate_pages(spark, 120, seed=13)
-    e = page_edges(pages).cache()
-    full = {
-        r.vertex: (round(r.hub, 9), round(r.authority, 9))
-        for r in hits(e, max_iter=6).collect()
-    }
-
-    root = str(tmp_path / "hits_run")
-    h1 = SuperstepHarness(spark, root, algo="hits", run_id="r1", interval=1)
-    hits(e, max_iter=2, harness=h1)  # partial
-    h2 = SuperstepHarness(spark, root, algo="hits", run_id="r2", interval=1)
-    got = {
-        r.vertex: (round(r.hub, 9), round(r.authority, 9))
-        for r in hits(e, max_iter=6, harness=h2).collect()
-    }
-    assert got == full
-
-
-def test_scc_resumes_from_checkpoint(spark, tmp_path):
-    """SCC resume: a run killed after phase 0 (outer budget exhausted)
-    resumes from the persisted label accumulator and completes to the
-    identical labels (verdict r4 #7)."""
-    from ccl_spark.scc import strongly_connected_components
-
-    # two 3-cycles with a one-way bridge: phase 0 extracts {1,2,3},
-    # phase 1 extracts {10,11,12} -> max_iter=1 dies mid-algorithm
-    edges = [(1, 2), (2, 3), (3, 1), (3, 10), (10, 11), (11, 12), (12, 10)]
-    e = spark.createDataFrame(edges, "src long, dst long").cache()
-    full = {
-        r.vertex: r.component for r in strongly_connected_components(e).collect()
-    }
-
-    root = str(tmp_path / "scc_run")
-    h1 = SuperstepHarness(spark, root, algo="scc", run_id="r1", interval=1)
-    with pytest.raises(RuntimeError, match="not done in 1 phases"):
-        strongly_connected_components(e, max_iter=1, harness=h1)
-    assert h1.lineage().agg(F.max("superstep")).first()[0] == 0
-
-    h2 = SuperstepHarness(spark, root, algo="scc", run_id="r2", interval=1)
-    got = {
-        r.vertex: r.component
-        for r in strongly_connected_components(e, harness=h2).collect()
-    }
-    assert got == full
-    assert (
-        h2.lineage().filter(F.col("run_id") == "r2").agg(F.min("superstep")).first()[0]
-        >= 1
-    )
-
-
-def test_scc_resume_rejects_mismatched_edges(spark, tmp_path):
-    from ccl_spark.scc import strongly_connected_components
-
-    edges = [(1, 2), (2, 3), (3, 1), (3, 10), (10, 11), (11, 12), (12, 10)]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    root = str(tmp_path / "scc_sig")
-    h1 = SuperstepHarness(spark, root, algo="scc", run_id="r1", interval=1)
-    with pytest.raises(RuntimeError):
-        strongly_connected_components(e, max_iter=1, harness=h1)
-
-    other = spark.createDataFrame([(5, 6), (6, 5)], "src long, dst long")
-    h2 = SuperstepHarness(spark, root, algo="scc", run_id="r2", interval=1)
-    with pytest.raises(ValueError, match="does not match"):
-        strongly_connected_components(other, harness=h2)
-
-
-def test_hits_resume_rejects_mismatched_edges(spark, tmp_path):
-    """ADVICE r4: resuming a hits checkpoint against a different edge
-    table must raise, not silently iterate the wrong graph."""
-    from ccl_spark.hits import hits
-
-    e = page_edges(generate_pages(spark, 120, seed=13)).cache()
-    root = str(tmp_path / "hits_sig")
-    h1 = SuperstepHarness(spark, root, algo="hits", run_id="r1", interval=1)
-    hits(e, max_iter=2, harness=h1)  # partial
-
-    other = page_edges(generate_pages(spark, 120, seed=99))
-    h2 = SuperstepHarness(spark, root, algo="hits", run_id="r2", interval=1)
-    with pytest.raises(ValueError, match="does not match"):
-        hits(other, max_iter=6, harness=h2)
-
-    # the matching edge table still resumes fine
-    h3 = SuperstepHarness(spark, root, algo="hits", run_id="r3", interval=1)
-    assert hits(e, max_iter=6, harness=h3).count() > 0
 
 
 def test_lpa_resume_rejects_mismatched_edges(spark, tmp_path):
