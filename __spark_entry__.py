@@ -486,57 +486,6 @@ FROM pr{iters} u JOIN tpr{iters} t USING (vertex)"""
     )
 
 
-def q_ppr_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch personalized PageRank: top-5 per seed for 3 seeds in one
-    job over sparse (seed, vertex) state — the related-pages serving
-    shape; oracle unrolls the same fixed iterations with the seed
-    dimension in every CTE."""
-    from ccl_spark.pagerank import ppr_batch
-
-    return ppr_batch(
-        _edges_small(spark, sf_dir), seeds=PPR_SEEDS, n_iter=8, k=5
-    )
-
-
-def _ppr_batch_sql(iters: int, seeds: list[int], k: int) -> str:
-    vals = ", ".join(f"({int(s)})" for s in seeds)
-    parts = [
-        f"""
-e AS MATERIALIZED ({_EDGES_SQL}),
-outdeg AS MATERIALIZED (SELECT src AS vertex, CAST(COUNT(*) AS DOUBLE) AS deg
-    FROM e GROUP BY src),
-seeds AS (SELECT CAST(seed AS BIGINT) AS seed FROM (VALUES {vals}) s(seed)),
-pr0 AS (SELECT seed, seed AS vertex, CAST(1.0 AS DOUBLE) AS r FROM seeds)"""
-    ]
-    for t in range(1, iters + 1):
-        p = f"pr{t - 1}"
-        parts.append(
-            f"""
-dang{t} AS (SELECT seed, COALESCE(SUM(r), 0) AS dg FROM {p}
-    LEFT JOIN outdeg USING (vertex) WHERE deg IS NULL GROUP BY seed),
-contrib{t} AS (SELECT p.seed, e.dst AS vertex, SUM(p.r / o.deg) AS c
-    FROM {p} p JOIN outdeg o USING (vertex)
-    JOIN e ON e.src = p.vertex GROUP BY p.seed, e.dst),
-pr{t} AS MATERIALIZED (SELECT seed, vertex, SUM(r) AS r FROM (
-    SELECT seed, vertex, {DAMPING} * c AS r FROM contrib{t}
-    UNION ALL
-    SELECT s.seed, s.seed AS vertex,
-           (1 - {DAMPING}) + {DAMPING} * COALESCE(dg.dg, 0) AS r
-    FROM seeds s LEFT JOIN dang{t} dg USING (seed)
-) z GROUP BY seed, vertex)"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
-SELECT seed, vertex, rank FROM (
-    SELECT seed, vertex, ROUND(r, 6) AS rank,
-           ROW_NUMBER() OVER (PARTITION BY seed
-               ORDER BY ROUND(r, 6) DESC, vertex) AS rn
-    FROM pr{iters}) z WHERE rn <= {k}"""
-    )
-
-
 def q_salted_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted in-degree (skew machinery, edges.py): must
     equal a plain GROUP BY — which is exactly the oracle."""
@@ -2553,47 +2502,6 @@ FROM ({union}) t GROUP BY p"""
     )
 
 
-def q_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated Katz centrality (4 rounds, alpha = 1/16) on the
-    directed corpus graph — alpha a power of two makes every
-    intermediate dyadic-exact, so Spark's unordered partial sums and
-    the oracle's sequential CTE sums are bit-identical (the node2vec
-    powers-of-two trick applied to a centrality)."""
-    from ccl_spark.pagerank import katz_centrality
-
-    e = _corpus_edges(spark, 1000)
-    _dump_edges(spark, 1000)
-    return katz_centrality(e.select("src", "dst"), alpha=1.0 / 16, n_iter=4, k=20)
-
-
-def _katz_sql(n_iter: int, k: int) -> str:
-    """The Katz recurrence unrolled: x_{t+1} = 1 + alpha * A^T x_t."""
-    src = f"'{_ORACLE_DIR}/corpus_edges_1000.parquet'"
-    parts = [
-        f"""
-e AS MATERIALIZED (SELECT DISTINCT src AS s, dst AS d FROM {src}),
-v AS MATERIALIZED (SELECT DISTINCT x AS vertex FROM (
-    SELECT s AS x FROM e UNION SELECT d FROM e)),
-x0 AS (SELECT vertex, CAST(1.0 AS DOUBLE) AS x FROM v)"""
-    ]
-    for t in range(n_iter):
-        parts.append(
-            f"""
-m{t} AS (SELECT e.d AS vertex, SUM(x.x) AS m
-    FROM e JOIN x{t} x ON x.vertex = e.s GROUP BY e.d),
-x{t + 1} AS MATERIALIZED (SELECT v.vertex,
-    1.0 + 0.0625 * COALESCE(m.m, 0.0) AS x
-    FROM v LEFT JOIN m{t} m ON m.vertex = v.vertex)"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
-SELECT vertex, ROUND(x, 6) AS katz FROM x{n_iter}
-ORDER BY ROUND(x, 6) DESC, vertex LIMIT {k}"""
-    )
-
-
 def q_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full k-core decomposition (per-vertex coreness) by the
     iterative-h-index algorithm (Lü et al. 2016), run to its fixpoint;
@@ -2682,68 +2590,6 @@ def q_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("center", "context")
     )
     return negative_samples(top, docs, k=5)
-
-
-def q_label_spreading(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-supervised seeded propagation on the corpus graph: the 4
-    top-degree hubs seed classes (hub id mod 3) and hold them fixed, 4
-    synchronous rounds of most-frequent-labeled-neighbor adoption
-    (count DESC, label ASC). Oracle = the same rounds as chained
-    CTEs."""
-    from ccl_spark.lpa import label_spreading
-
-    e = _corpus_edges(spark, 1000)
-    _dump_edges(spark, 1000)
-    und = e.select(F.col("src").alias("s"), F.col("dst").alias("d"))
-    deg = (
-        und.unionByName(und.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("dg"))
-    )
-    seeds = (
-        deg.orderBy(F.desc("dg"), F.asc("s"))
-        .limit(4)
-        .select(
-            F.col("s").alias("vertex"),
-            F.pmod(F.col("s"), F.lit(3)).cast("long").alias("label"),
-        )
-    )
-    return label_spreading(e, seeds, n_iter=4)
-
-
-def _label_spreading_sql(n_iter: int) -> str:
-    src = f"'{_ORACLE_DIR}/corpus_edges_1000.parquet'"
-    parts = [
-        f"""
-und AS MATERIALIZED (SELECT DISTINCT s, d FROM (
-    SELECT src AS s, dst AS d FROM {src} WHERE src <> dst
-    UNION SELECT dst, src FROM {src} WHERE src <> dst)),
-dg AS (SELECT s, COUNT(*) AS dg FROM und GROUP BY s),
-seeds AS MATERIALIZED (SELECT s AS vertex,
-    CAST(s % 3 + CASE WHEN s % 3 < 0 THEN 3 ELSE 0 END AS BIGINT) AS label
-    FROM dg ORDER BY dg DESC, s LIMIT 4),
-st0 AS (SELECT vertex, label FROM seeds)"""
-    ]
-    for t in range(n_iter):
-        parts.append(
-            f"""
-vt{t} AS (SELECT e.s AS vertex, st.label, COUNT(*) AS n
-    FROM und e JOIN st{t} st ON st.vertex = e.d GROUP BY 1, 2),
-tp{t} AS (SELECT vertex, label FROM (
-    SELECT vertex, label,
-           ROW_NUMBER() OVER (PARTITION BY vertex ORDER BY n DESC, label) AS rn
-    FROM vt{t}) z WHERE rn = 1),
-st{t + 1} AS MATERIALIZED (SELECT vertex, label FROM seeds
-    UNION ALL SELECT t.vertex, t.label FROM tp{t} t
-    WHERE NOT EXISTS (SELECT 1 FROM seeds s WHERE s.vertex = t.vertex))"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"\nSELECT vertex, label FROM st{n_iter}"
-    )
 
 
 def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3194,43 +3040,6 @@ def q_butterflies(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _corpus_edges(spark, 1000)
     _dump_edges(spark, 1000)
     return butterflies(e.select("src", "dst"))
-
-
-def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-truss of the corpus graph (every surviving edge in ≥ 2
-    triangles within the subgraph) — iterative support peel run to
-    fixpoint; the oracle unrolls the same peel as chained CTEs with
-    headroom rounds (the peel is idempotent once converged)."""
-    from ccl_spark.triangles import ktruss
-
-    e = _corpus_edges(spark, 1000)
-    _dump_edges(spark, 1000)
-    return ktruss(e.select("src", "dst"), k=4)
-
-
-def _ktruss_sql(k: int, rounds: int) -> str:
-    """The support peel unrolled: triangle enumeration over canonical
-    a<b edges (x<y<z once each), per-edge support, survivor filter."""
-    src = f"'{_ORACLE_DIR}/corpus_edges_1000.parquet'"
-    parts = [
-        f"""
-e0 AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-       FROM {src} WHERE src <> dst)"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f"""
-t{r} AS MATERIALIZED (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        FROM e{r} e1 JOIN e{r} e2 ON e2.a = e1.a AND e1.b < e2.b
-        JOIN e{r} e3 ON e3.a = e1.b AND e3.b = e2.b),
-s{r} AS (SELECT a, b, COUNT(*) AS sup FROM (
-            SELECT x AS a, y AS b FROM t{r}
-            UNION ALL SELECT x, z FROM t{r}
-            UNION ALL SELECT y, z FROM t{r}) u GROUP BY a, b),
-e{r + 1} AS MATERIALIZED (SELECT e.a, e.b FROM e{r} e
-        JOIN s{r} s ON s.a = e.a AND s.b = e.b WHERE s.sup >= {k - 2})"""
-        )
-    return "WITH " + ",".join(parts) + f"\nSELECT a, b FROM e{rounds}"
 
 
 def _walks_sql(walk_len: int, n_walks: int, seed: int) -> str:
@@ -4555,46 +4364,6 @@ FROM hqhost, hqcuts
 """
 
 
-EV_ITERS = 4
-
-
-def q_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated eigenvector centrality (integer-exact 4-step walk
-    counts, one final sup-norm division) — top-20 on the corpus
-    graph."""
-    from ccl_spark.pagerank import eigenvector_centrality
-
-    e = _corpus_edges(spark, 1000)
-    _dump_edges(spark, 1000)
-    return eigenvector_centrality(e, n_iter=EV_ITERS, k=20)
-
-
-def _eigenvector_sql() -> str:
-    src = f"'{_ORACLE_DIR}/corpus_edges_1000.parquet'"
-    steps = []
-    prev = "evx0"
-    for i in range(1, EV_ITERS + 1):
-        steps.append(
-            f"evx{i} AS (SELECT v.vertex, CAST(COALESCE(SUM(x.x), 0) AS BIGINT) AS x\n"
-            f"  FROM evverts v LEFT JOIN evde e ON e.d = v.vertex\n"
-            f"  LEFT JOIN {prev} x ON x.vertex = e.s\n"
-            f"  GROUP BY v.vertex)"
-        )
-        prev = f"evx{i}"
-    chain = ",\n".join(steps)
-    return f"""
-WITH evde AS (SELECT DISTINCT src AS s, dst AS d FROM {src} WHERE src <> dst),
-evverts AS (SELECT s AS vertex FROM evde UNION SELECT d FROM evde),
-evx0 AS (SELECT vertex, CAST(1 AS BIGINT) AS x FROM evverts),
-{chain},
-evmx AS (SELECT GREATEST(MAX(x), 1) AS mx FROM {prev})
-SELECT vertex, x AS walks, ROUND(CAST(x AS DOUBLE) / mx, 6) AS score
-FROM {prev}, evmx
-ORDER BY score DESC, vertex ASC
-LIMIT 20
-"""
-
-
 PCA_ITERS = 4
 
 
@@ -4851,47 +4620,6 @@ pr0 AS MATERIALIZED (SELECT vertex, 1.0 / (SELECT n FROM nn) AS r FROM verts)
         + f"\nSELECT 'host' || CAST(vertex AS VARCHAR) || '.example.com' AS host,"
         f" ROUND(r, 6) AS rank FROM pr{iters}"
     )
-
-
-def q_pr_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-iteration PageRank convergence metrics on the host graph:
-    L1 residual + max per-vertex delta in exact integer micro-units —
-    the superstep-lineage convergence row as a first-class query."""
-    from ccl_spark.edges import host_graph
-    from ccl_spark.pagerank import pagerank_residuals
-
-    hg = host_graph(_host_url_pairs(spark, sf_dir))
-    he = hg.select(
-        F.regexp_extract("src_host", r"host(\d+)", 1).cast("long").alias("src"),
-        F.regexp_extract("dst_host", r"host(\d+)", 1).cast("long").alias("dst"),
-        "weight",
-    )
-    return pagerank_residuals(he, n_iter=HOST_PR_ITERS, weight="weight")
-
-
-def _pr_convergence_sql(iters: int) -> str:
-    # same weighted-PR chain as host_pagerank, plus per-step residual
-    # rows; deltas floor to int64 micro-units BEFORE summing so the
-    # aggregate is order-insensitive on both engines
-    pre = f"""
-WITH
-e AS MATERIALIZED ({_HOST_EDGES_SQL}),
-verts AS MATERIALIZED (SELECT DISTINCT v AS vertex FROM
-          (SELECT src AS v FROM e UNION SELECT dst FROM e)),
-nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-outdeg AS MATERIALIZED (SELECT src AS vertex, SUM(w) AS deg FROM e GROUP BY src),
-pr0 AS MATERIALIZED (SELECT vertex, 1.0 / (SELECT n FROM nn) AS r FROM verts)
-"""
-    res = []
-    for k in range(1, iters + 1):
-        res.append(
-            f"SELECT CAST({k} AS INTEGER) AS iter,"
-            f" CAST(SUM(dm) AS BIGINT) AS residual_micro,"
-            f" CAST(MAX(dm) AS BIGINT) AS max_delta_micro FROM"
-            f" (SELECT CAST(FLOOR(ABS(a.r - b.r) * 1e6 + 0.5) AS BIGINT) AS dm"
-            f"  FROM pr{k} a JOIN pr{k - 1} b USING (vertex))"
-        )
-    return pre + _wpr_steps(iters) + "\n" + "\nUNION ALL\n".join(res)
 
 
 _NF_MEMO: dict[str, list[tuple[int, int]]] = {}
@@ -7068,7 +6796,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vertex_cover": q_vertex_cover,
         "mst": q_mst,
         "single_linkage": q_single_linkage,
-        "ppr_batch": q_ppr_batch,
         "core_numbers": q_core_numbers,
         "eccentricity": q_eccentricity,
         "simrank": q_simrank,
@@ -7097,7 +6824,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "clique4": q_clique4,
         "triad_significance": q_triad_significance,
         "host_quality": q_host_quality,
-        "eigenvector": q_eigenvector,
         "pca_top": q_pca_top,
         "wl_colors": q_wl_colors,
         "cdc_chunks": q_cdc_chunks,
@@ -7156,7 +6882,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "host_terms": q_host_terms,
         "burstiness": q_burstiness,
         "assoc_rules": q_assoc_rules,
-        "pr_convergence": q_pr_convergence,
         "retention": q_retention,
         "json_props": q_json_props,
         "quantiles": q_quantiles,
@@ -7195,7 +6920,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "harmonic": q_harmonic,
         "landmarks": q_landmarks,
         "landmark_est": q_landmark_est,
-        "katz": q_katz,
         "skipgram": q_skipgram,
         "pmi": q_pmi,
         "negatives": q_negatives,
@@ -7204,7 +6928,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fuzzy_vocab": q_fuzzy_vocab,
         "token_coverage": q_token_coverage,
         "doclen_dist": q_doclen_dist,
-        "label_spreading": q_label_spreading,
         "boilerplate": q_boilerplate,
         "repetition": q_repetition,
         "ngram_dedup": q_ngram_dedup,
@@ -7219,7 +6942,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "closeness": q_closeness,
         "walks": q_walks,
         "node2vec": q_node2vec,
-        "ktruss": q_ktruss,
         "mis": q_mis,
         "butterflies": q_butterflies,
         "modularity": q_modularity,
@@ -7294,7 +7016,6 @@ HAVING COUNT(*) >= 3
         "pagerank": _pagerank_sql(PR_ITERS),
         "pagerank_seeded": _pagerank_sql(PPR_ITERS, seeds=PPR_SEEDS),
         "spam_mass": _spam_mass_sql(PPR_ITERS, PPR_SEEDS),
-        "ppr_batch": _ppr_batch_sql(8, PPR_SEEDS, 5),
         "salted_degrees": f"""
 WITH e AS ({_EDGES_SQL})
 SELECT dst AS vertex, COUNT(*) AS in_deg FROM e GROUP BY dst
@@ -7629,14 +7350,12 @@ FROM top JOIN r ON r.dst_url = top.dst_url WHERE r.rank <= 3
         "landmarks": _landmarks_sql(4, 5),
         "landmark_est": _landmark_est_sql(4, 5, LM_STRIDE),
         "eccentricity": _ecc_sql(4, 5),
-        "katz": _katz_sql(4, 20),
         "core_numbers": _core_numbers_sql(12),
         "skipgram": "WITH "
         + _SKIPGRAM_TOKS_SQL
         + """
 SELECT center, context, cnt FROM pairs
 ORDER BY cnt DESC, center, context LIMIT 100""",
-        "label_spreading": _label_spreading_sql(4),
         "heaps": _heaps_sql(),
         "fuzzy_vocab": _fuzzy_vocab_sql(),
         "token_coverage": _token_coverage_sql(),
@@ -7842,7 +7561,6 @@ FROM p WHERE s <> d GROUP BY s, d
         "clique4": _clique4_sql(),
         "triad_significance": _triad_significance_sql(),
         "host_quality": _host_quality_sql(),
-        "eigenvector": _eigenvector_sql(),
         "pca_top": _pca_sql(PCA_ITERS),
         "wl_colors": _wl_sql(WL_ITERS, 20),
         "cdc_chunks": _cdc_sql(4, 8),
@@ -7930,7 +7648,6 @@ LIMIT 20
         "closeness": _closeness_sql(4, 5, 20),
         "walks": _walks_sql(4, 2, 7),
         "node2vec": _node2vec_sql(3, 1, 2.0, 0.5, 11),
-        "ktruss": _ktruss_sql(4, 6),
         "mis": _mis_sql(7),
         "matching": _matching_sql(14),
         "vertex_cover": _vertex_cover_sql(14),
@@ -8065,7 +7782,6 @@ FROM k WHERE k IS NOT NULL GROUP BY 1
         "host_terms": _host_terms_sql(),
         "burstiness": _burstiness_sql(),
         "assoc_rules": _assoc_rules_sql(),
-        "pr_convergence": _pr_convergence_sql(HOST_PR_ITERS),
         "funnel": """
 WITH s0 AS (SELECT user_id AS u, MIN(ts) AS t FROM events
             WHERE event_type = 'view' GROUP BY user_id),

@@ -6,7 +6,8 @@ web-scale link graphs, built on the Spark DataFrame API:
 
 - ``cc``         connected components (large-star / small-star union-find)
 - ``pagerank``   power-iteration PageRank with dangling-mass handling,
-                 TrustRank spam mass, Katz + eigenvector centrality
+                 personalized / weighted / warm-start modes, TrustRank
+                 spam mass
 - ``lpa``        synchronous label propagation
 - ``triangles``  degree-ordered triangle counting, directed census,
                  16-type triad census + U|MAN significance profile, 4-clique counting
@@ -18,7 +19,8 @@ web-scale link graphs, built on the Spark DataFrame API:
 - ``extract``    Arrow-vectorized text + hyperlink extraction
 - ``edges``      edge-table builder (dedup, salt, degrees, CSR blocks),
                  URL canonicalization, domain-blocklist filtering
-- ``superstep``  checkpoint / lineage / resume harness for iterative jobs
+- ``superstep``  the one superstep loop of CC, PageRank and LPA, with
+                 its checkpoint / lineage / resume harness
 - ``kcore``      k-core peeling
 - ``betweenness`` pivot-sampled Brandes betweenness / harmonic / closeness
 - ``neighborhood`` exact neighborhood function, effective diameter, HyperBall

@@ -37,36 +37,18 @@ def _dedup_pairs(df: DataFrame) -> DataFrame:
     return df.filter(F.col("u") != F.col("v")).distinct()
 
 
-def _undirected(edges: DataFrame) -> DataFrame:
-    """All (u, v) neighbor pairs, both directions, no self-loops."""
-    fwd = edges.select(F.col("u"), F.col("v"))
-    rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    return _dedup_pairs(fwd.unionByName(rev))
-
-
-def large_star(
-    edges: DataFrame, canonical: bool = False, broadcast_mins: bool = False
-) -> DataFrame:
+def large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) + {u}).
 
-    Output pairs always satisfy u > v (v > center >= min), so the
-    result is already in canonical (hi, lo) orientation. With
-    ``canonical=True`` the input is a distinct (hi, lo) set, so the
-    both-directions neighbor view needs no dedup — one shuffle saved;
-    Catalyst reuses the groupBy exchange for the join side.
-
-    ``broadcast_mins`` is the explicit late-round frontier path (north
-    star): when the surviving edge set is small, ship the per-vertex
-    min table to every task (BroadcastExchange) instead of shuffling
-    the neighbor table — the join becomes a map-side BroadcastHashJoin.
+    The input is a distinct canonical (hi, lo) set, so the
+    both-directions neighbor view needs no dedup; Catalyst reuses the
+    groupBy exchange for the join side. Output pairs always satisfy
+    u > v (v > center >= min), so the result is already in canonical
+    (hi, lo) orientation.
     """
-    nbrs = _undirected(edges) if not canonical else edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    nbrs = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     mins = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
     mins = mins.select("u", F.least("mn", "u").alias("m"))
-    if broadcast_mins:
-        mins = F.broadcast(mins)
     out = (
         nbrs.filter(F.col("v") > F.col("u"))
         .join(mins, "u")
@@ -75,24 +57,14 @@ def large_star(
     return out.filter(F.col("u") != F.col("v"))
 
 
-def small_star(
-    edges: DataFrame, canonical: bool = False, broadcast_mins: bool = False
-) -> DataFrame:
+def small_star(edges: DataFrame) -> DataFrame:
     """Connect every smaller-or-equal neighbor of u (and u) to their min.
 
-    Returns the canonical distinct (hi, lo) edge set of the next round.
-    ``canonical=True`` skips re-orientation when the input already has
-    u > v on every pair (true for large_star output).
+    The input has u > v on every pair (true for large_star output);
+    returns the canonical distinct (hi, lo) edge set of the next round.
     """
-    canon = (
-        edges
-        if canonical
-        else edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-    )
-    canon = _dedup_pairs(canon)
+    canon = _dedup_pairs(edges)
     mins = canon.groupBy("u").agg(F.min("v").alias("m"))
-    if broadcast_mins:
-        mins = F.broadcast(mins)
     lo = canon.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
     hi = mins.select(F.col("u"), F.col("m").alias("v"))
     return _dedup_pairs(lo.unionByName(hi))
@@ -108,13 +80,10 @@ def _local_contract(pairs: DataFrame) -> DataFrame:
     O(E) work per pass and O(log V) passes, no Python per-edge loop —
     then emits the local star forest as pointer rows
     (vertex -> local min representative). A vertex split across
-    partitions gets different local reps; those pointer rows are what
-    join the pieces in the global fixpoint, which therefore only has to
-    resolve CROSS-partition structure. This is the reference's 'label
-    segments independently, then reconcile' plan
-    (ccl_marker_stack.py:1678-1685) with the serial interface sweep
-    replaced by the global star fixpoint; the win grows with partition
-    locality (src-bucketed edge tables).
+    partitions gets different local reps; the local finish's second
+    pass over one partition joins those pieces. This is the
+    reference's 'label segments independently, then reconcile' plan
+    (ccl_marker_stack.py:1678-1685).
     """
     import pandas as pd
 
@@ -196,9 +165,7 @@ def connected_components_from_csr(
                     yield pd.DataFrame({"u": ids, "v": ids})
 
     pointers = csr.mapInPandas(local, schema="u long, v long")
-    return connected_components(
-        pointers, "u", "v", vertices=vertices, pre_contract=False, **kwargs
-    )
+    return connected_components(pointers, "u", "v", vertices=vertices, **kwargs)
 
 
 def connected_components(
@@ -208,8 +175,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iter: int = 60,
     harness: SuperstepHarness | None = None,
-    pre_contract: bool = False,
-    broadcast_threshold: int = 10_000,
     local_finish_threshold: int = 4_000_000,
 ) -> DataFrame:
     """Return ``(vertex long, component long)``.
@@ -226,43 +191,25 @@ def connected_components(
     whose count+xor signature rides the same job; the fixpoint is the
     round whose signature equals its input's.
 
-    Round-cost controls (the fixpoint is round-latency-bound on small
-    frontiers — each materialization pays a fixed scheduling cost):
-
-    - ``pre_contract``: solve each partition's subgraph locally in
-      numpy first; the global fixpoint starts from the pointer star
-      forests and only resolves cross-partition structure. Pays ONLY
-      when partitions have src-locality (bucketed/CSR input — it is
-      the default for connected_components_from_csr); on uniformly
-      hashed edges each vertex spans many partitions, so the pointer
-      set is as large as the input and the Arrow pass is pure
-      overhead (measured: +20s on 6.8M shuffled edges). Off by
-      default for that reason.
-    - ``broadcast_threshold``: once the surviving edge set is smaller
-      than this, the per-vertex min table is broadcast (explicit
-      BroadcastExchange) so late rounds stop shuffling the frontier.
-      Collect+rebroadcast beats a shuffle only for genuinely small
-      frontiers: measured a ~0.6s/round LOSS at 1e5 rows locally,
-      hence the 1e4 default.
-    - ``local_finish_threshold``: subcritical finish. Once the
-      surviving edge set fits comfortably in a handful of tasks
-      (~64 MB of packed int64 arrays at the 4M-pair default), the
-      remaining fixpoint tail is latency-bound, not throughput-bound
-      — paying O(log n) more cluster rounds to converge a subcritical
-      graph is pure scheduling overhead. Profiled on the 6.8M-edge
-      corpus: the star fixpoint lands at 1.98M pairs, so a 1M
-      threshold pays two extra distributed rounds (the second a pure
-      no-change verification) that the finish replaces. The
-      finish is TWO-LEVEL: a parallel Arrow contraction pass over
-      <=16 chunks, then one merge task over the contracted union —
-      so the serial straggler task (round-2 verdict) only ever sees
-      the pass-1 output, not the raw 1M pairs, and the serial
-      fraction that Amdahl-caps N -> 4N scaling shrinks by the
-      pass-1 reduction factor. Labels are identical to the
-      distributed result (both are canonical minima). At 100 TB the
-      distributed rounds run until the frontier actually becomes
-      subcritical, exactly as a hybrid engine should. Set 0 to force
-      pure-distributed execution (tests do).
+    ``local_finish_threshold`` is the subcritical finish (the fixpoint
+    is round-latency-bound on small frontiers — each materialization
+    pays a fixed scheduling cost). Once the surviving edge set fits
+    comfortably in a handful of tasks (~64 MB of packed int64 arrays at
+    the 4M-pair default), the remaining fixpoint tail is latency-bound,
+    not throughput-bound — paying O(log n) more cluster rounds to
+    converge a subcritical graph is pure scheduling overhead. Profiled
+    on the 6.8M-edge corpus: the star fixpoint lands at 1.98M pairs, so
+    a 1M threshold pays two extra distributed rounds (the second a pure
+    no-change verification) that the finish replaces. The finish is
+    TWO-LEVEL: a parallel Arrow contraction pass over <=16 chunks, then
+    one merge task over the contracted union — so the serial straggler
+    task (round-2 verdict) only ever sees the pass-1 output, not the raw
+    1M pairs, and the serial fraction that Amdahl-caps N -> 4N scaling
+    shrinks by the pass-1 reduction factor. Labels are identical to the
+    distributed result (both are canonical minima). At 100 TB the
+    distributed rounds run until the frontier actually becomes
+    subcritical, exactly as a hybrid engine should. Set 0 to force
+    pure-distributed execution (tests do).
     """
     spark = edges.sparkSession
     pairs = edges.select(
@@ -274,8 +221,6 @@ def connected_components(
     if vertices is not None:
         verts = verts.unionByName(vertices.select(F.col("vertex").cast("long")))
     verts = verts.distinct()
-
-    contracted = _local_contract(pairs) if pre_contract else pairs
 
     def local_finish(n: int) -> bool:
         return 0 < n <= local_finish_threshold
@@ -294,16 +239,11 @@ def connected_components(
             p = min(spark.sparkContext.defaultParallelism, 16)
             merged = _local_contract(cur.coalesce(p)) if p > 1 else cur
             return _local_contract(merged.coalesce(1))
-        bcast = prev["n"] <= broadcast_threshold
-        return small_star(
-            large_star(cur, canonical=True, broadcast_mins=bcast),
-            canonical=True,
-            broadcast_mins=bcast,
-        )
+        return small_star(large_star(cur))
 
     # canonical (hi, lo) starting set — the round-to-round invariant
     start = _dedup_pairs(
-        contracted.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        pairs.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
     )
     sig = signature_columns(("u", "v"))
     cur = run_supersteps(

@@ -102,64 +102,6 @@ def label_propagation(
     )
 
 
-def label_spreading(
-    edges: DataFrame,
-    seeds: DataFrame,
-    n_iter: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Semi-supervised seeded label propagation (Zhu & Ghahramani
-    2002; the discrete web-spam/quality-propagation shape of Castillo
-    et al. 2007): ``seeds(vertex, label)`` hold their labels FIXED,
-    every other vertex synchronously adopts the most frequent label
-    among its labeled neighbors (count DESC, label ASC tie-break, so
-    the assignment is parallelism- and engine-independent); unlabeled
-    vertices with no labeled neighbor stay unlabeled until the
-    frontier reaches them.  Returns ``(vertex long, label long)`` for
-    the vertices labeled after exactly ``n_iter`` rounds (fixed rounds
-    — the oracle unrolls the same chain; rounds past the fixpoint are
-    identity).
-
-    Per round: one neighbor join against the O(labeled) state + one
-    (vertex, label) count + one min_by argmax aggregate — the LPA
-    superstep with a seed override, all JVM-side."""
-    und = (
-        edges.select(
-            F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
-        )
-        .filter(F.col("s") != F.col("d"))
-        .unionByName(
-            edges.select(
-                F.col(dst).cast("long").alias("s"), F.col(src).cast("long").alias("d")
-            ).filter(F.col("s") != F.col("d"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sd = seeds.select(
-        F.col("vertex").cast("long").alias("vertex"),
-        F.col("label").cast("long").alias("label"),
-    ).localCheckpoint(eager=True)
-    state = sd
-    for _ in range(n_iter):
-        votes = (
-            und.join(
-                state.select(F.col("vertex").alias("d"), "label"), "d"
-            )
-            .groupBy(F.col("s").alias("vertex"), "label")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        top = votes.groupBy("vertex").agg(
-            F.min_by("label", F.struct((-F.col("n")).alias("nn"), "label"))
-            .alias("label")
-        )
-        state = sd.unionByName(
-            top.join(sd.select("vertex"), "vertex", "left_anti")
-        ).localCheckpoint(eager=True)
-    return state
-
-
 def weighted_label_propagation(
     edges: DataFrame,
     weight: str,

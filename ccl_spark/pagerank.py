@@ -248,153 +248,6 @@ def pagerank(
     return ranks.select("vertex", "rank")
 
 
-def katz_centrality(
-    edges: DataFrame,
-    alpha: float = 1.0 / 16,
-    n_iter: int = 4,
-    k: int = 20,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Top-k vertices by truncated Katz centrality (Katz 1953):
-    x₀ = 1,  x_{t+1}(v) = 1 + α · Σ_{u→v} x_t(u), i.e. after n_iter
-    rounds x(v) = Σ_{ℓ≤n_iter} α^ℓ · (#walks of length ℓ ending at v)
-    — the walk-counting cousin of PageRank that rewards being reachable
-    by many short paths rather than by random-surfer mass.
-
-    Determinism: ``alpha`` must be a (negative) power of two.  Every
-    intermediate is then a dyadic rational that IEEE doubles represent
-    exactly, so Spark's unordered partial sums and the SQL oracle's
-    sequential sums produce bit-identical values — the same
-    powers-of-two trick node2vec uses for its window cumsums.  The
-    final (round(x, 6) DESC, vertex ASC) tie-break therefore selects
-    identical rows on both engines.
-
-    Execution shape: per round one edge-keyed equi-join against the
-    O(|V|) score table and one groupBy sum (map-side partial) — the
-    PageRank inner loop without the dangling/teleport bookkeeping.
-    Fixed n_iter rounds, no convergence probe, each round's state
-    localCheckpoint-ed so plan depth stays O(1).
-    """
-    import math
-
-    frac = math.log2(1.0 / alpha)
-    if frac != int(frac):
-        raise ValueError(f"katz_centrality: alpha must be a power of two, got {alpha}")
-    e = (
-        edges.select(F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("s").alias("vertex"))
-        .unionByName(e.select(F.col("d").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    x = verts.withColumn("x", F.lit(1.0))
-    for _ in range(n_iter):
-        contrib = (
-            e.join(x.withColumnRenamed("vertex", "s"), "s")
-            .groupBy(F.col("d").alias("vertex"))
-            .agg(F.sum("x").alias("m"))
-        )
-        x = (
-            verts.join(contrib, "vertex", "left")
-            .select(
-                "vertex",
-                (F.lit(1.0) + F.lit(alpha) * F.coalesce("m", F.lit(0.0))).alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        x.select("vertex", F.round("x", 6).alias("katz"))
-        .orderBy(F.desc("katz"), F.asc("vertex"))
-        .limit(k)
-    )
-
-
-def ppr_batch(
-    edges: DataFrame,
-    seeds: list[int],
-    damping: float = 0.85,
-    n_iter: int = 8,
-    k: int = 5,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Batch personalized PageRank: ONE ranking per seed in a single
-    job — ``(seed long, vertex long, rank double)`` top-k rows per
-    seed after ``n_iter`` fixed iterations.  This is the related-pages
-    / recommendations serving shape (Jeh & Widom 2003 scale the
-    single-source case; batching seeds shares every edge scan).
-
-    State is the SPARSE (seed, vertex, rank) table — only vertices a
-    seed's probability has reached carry rows, so early iterations
-    touch seed neighborhoods, not |seeds|x|V|.  Per iteration: one
-    state⋈edges contribution join (keyed on the vertex), one per-seed
-    dangling aggregate folded back into the seed (personalized
-    teleport), one union + 2-row sum.  Dangling and teleport mass go
-    to the owning seed, so each seed's ranking is an independent PPR
-    — verified against pagerank(seeds=[s]) per seed in tests.
-    Fixed iterations (no convergence probe) keep the sequence
-    oracle-replayable; top-k ties break on (rank DESC, vertex)."""
-    from pyspark.sql import Window
-
-    e = (
-        edges.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    outdeg = e.groupBy(F.col("u").alias("vertex")).agg(
-        F.count(F.lit(1)).cast("double").alias("deg")
-    ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    seed_df = spark.createDataFrame(
-        [(int(s),) for s in seeds], "seed long"
-    ).localCheckpoint(eager=True)
-    state = seed_df.select(
-        "seed", F.col("seed").alias("vertex"), F.lit(1.0).alias("r")
-    )
-    d = float(damping)
-    for _ in range(n_iter):
-        dang = (
-            state.join(outdeg, "vertex", "left")
-            .filter(F.col("deg").isNull())
-            .groupBy("seed")
-            .agg(F.sum("r").alias("dg"))
-        )
-        contrib = (
-            state.join(outdeg, "vertex")
-            .join(e.withColumnRenamed("u", "vertex"), "vertex")
-            .groupBy("seed", F.col("v").alias("vertex"))
-            .agg(F.sum(F.col("r") / F.col("deg")).alias("c"))
-        )
-        state = (
-            contrib.select("seed", "vertex", (F.lit(d) * F.col("c")).alias("r"))
-            .unionByName(
-                seed_df.join(dang, "seed", "left").select(
-                    "seed",
-                    F.col("seed").alias("vertex"),
-                    (
-                        F.lit(1.0 - d)
-                        + F.lit(d) * F.coalesce("dg", F.lit(0.0))
-                    ).alias("r"),
-                )
-            )
-            .groupBy("seed", "vertex")
-            .agg(F.sum("r").alias("r"))
-            .localCheckpoint(eager=True)
-        )
-    w = Window.partitionBy("seed").orderBy(F.desc("rank"), F.asc("vertex"))
-    return (
-        state.select("seed", "vertex", F.round("r", 6).alias("rank"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 def spam_mass(
     edges: DataFrame,
     trusted: list[int],
@@ -448,177 +301,3 @@ def spam_mass(
             (F.col("pr_raw") - F.col("tr_raw")) / F.col("pr_raw"), 6
         ).alias("spam_mass"),
     )
-
-
-def eigenvector_centrality(
-    edges: DataFrame,
-    n_iter: int = 4,
-    k: int = 20,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Top-k vertices by truncated eigenvector centrality via
-    integer-exact power iteration: x₀ = 1, x_{t+1}(v) = Σ_{u→v}
-    x_t(u), so after n_iter rounds x(v) is the exact **count of
-    n_iter-step walks ending at v** (a long, no float anywhere in the
-    iteration); the centrality score is the single sup-norm
-    normalization x / max(x) applied once at the end — one division
-    and a round(6), so Spark's unordered partial sums and a SQL
-    oracle's sequential sums agree bit-for-bit (the katz/node2vec
-    exactness trick applied to the un-damped recurrence).
-
-    Walk counts grow like λ₁^n_iter: int64 holds n·d_max^n_iter, which
-    at web scale bounds n_iter ≈ 4-6 for hub degrees in the 10³-10⁴
-    range — past that, switch the accumulator to decimal(38,0) or
-    rescale by a power of two between rounds (both keep exactness).
-
-    Execution shape per round: one edge-keyed equi-join against the
-    O(|V|) count table and one groupBy sum with map-side partials —
-    identical to the PageRank inner loop minus teleport bookkeeping;
-    each round localCheckpoint-ed so plan depth stays O(1).
-    Returns ``(vertex, walks, score)``, top-k by (score DESC, vertex).
-    """
-    e = (
-        edges.select(F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("s").alias("vertex"))
-        .unionByName(e.select(F.col("d").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    x = verts.withColumn("x", F.lit(1).cast("long"))
-    for _ in range(n_iter):
-        contrib = (
-            e.join(x.withColumnRenamed("vertex", "s"), "s")
-            .groupBy(F.col("d").alias("vertex"))
-            .agg(F.sum("x").cast("long").alias("m"))
-        )
-        x = (
-            verts.join(contrib, "vertex", "left")
-            .select("vertex", F.coalesce("m", F.lit(0)).cast("long").alias("x"))
-            .localCheckpoint(eager=True)
-        )
-    mx = x.agg(F.greatest(F.max("x"), F.lit(1)).alias("mx"))
-    return (
-        x.crossJoin(F.broadcast(mx))
-        .select(
-            "vertex",
-            F.col("x").alias("walks"),
-            F.round(F.col("x") / F.col("mx"), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vertex"))
-        .limit(k)
-    )
-
-
-def pagerank_residuals(
-    edges: DataFrame,
-    n_iter: int = 8,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-) -> DataFrame:
-    """Per-iteration PageRank convergence metrics: ``(iter int,
-    residual_micro long, max_delta_micro long)`` — the L1 residual and
-    max per-vertex delta of each power iteration, in exact integer
-    micro-units (``floor(|r_k(v) - r_{k-1}(v)| * 1e6 + 0.5)`` summed
-    as int64, so the metric is order-insensitive: Spark's unordered
-    partial sums and a sequential SQL replay agree bit-for-bit).
-
-    This is the convergence-metrics row the superstep harness records
-    per checkpoint (superstep.py lineage), surfaced as a first-class
-    query: run it on a schedule to pick the iteration budget, or
-    compare residual curves across crawl snapshots.  Mirrors
-    CCL-style iterate-to-convergence reporting (reference run logs
-    expose per-sweep deltas); update arithmetic is the engine's
-    weighted update (contrib = r * w / out-weight, dangling and
-    teleport mass spread 1/n).
-
-    Execution: one edge⋈rank join + one groupBy per iteration (each
-    state eagerly checkpointed so plan depth stays O(1)); the per-
-    iteration metric aggregates are DEFERRED 1-row frames unioned and
-    collected in ONE job at the end — n_iter driver round-trips become
-    one, and driver-side state is n_iter scalar rows, never the rank
-    vector.
-    """
-    if n_iter <= 0:
-        raise ValueError("pagerank_residuals: n_iter must be positive")
-    w = (
-        F.lit(1.0)
-        if weight is None
-        else F.col(weight).cast("double")
-    )
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-            w.alias("w"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = verts.count()
-    spark = edges.sparkSession
-    if n == 0:
-        return spark.createDataFrame(
-            [], "iter int, residual_micro long, max_delta_micro long"
-        )
-    outdeg = e.groupBy(F.col("src").alias("vertex")).agg(
-        F.sum("w").alias("deg")
-    ).localCheckpoint(eager=True)
-    d = float(damping)
-    r = verts.select("vertex", F.lit(1.0 / n).alias("r")).localCheckpoint(
-        eager=True
-    )
-    rows = []
-    for k in range(1, n_iter + 1):
-        dang = (
-            r.join(outdeg, "vertex", "left")
-            .where(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dg"))
-        )
-        contrib = (
-            r.join(outdeg, "vertex")
-            .join(e.withColumnRenamed("src", "vertex"), "vertex")
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(F.sum(F.col("r") * F.col("w") / F.col("deg")).alias("c"))
-        )
-        r_new = (
-            verts.join(contrib, "vertex", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "vertex",
-                (
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d)
-                    * (F.coalesce("c", F.lit(0.0)) + F.col("dg") / n)
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        delta = F.floor(
-            F.abs(r_new["r"] - F.col("r_old")) * 1e6 + F.lit(0.5)
-        ).cast("long")
-        rows.append(
-            r_new.join(r.withColumnRenamed("r", "r_old"), "vertex").agg(
-                F.lit(k).cast("int").alias("iter"),
-                F.sum(delta).alias("residual_micro"),
-                F.max(delta).alias("max_delta_micro"),
-            )
-        )
-        r = r_new
-    out = rows[0]
-    for m in rows[1:]:
-        out = out.unionByName(m)
-    return out

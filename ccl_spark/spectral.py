@@ -11,7 +11,7 @@ Spark-first shape: the iteration is a per-round (join + aggregate)
 over the edge table — the same BSP pattern as pagerank — with every
 value an exact integer (``decimal(38,0)``), so results are
 bit-reproducible across partitionings AND in ANSI SQL (DuckDB
-HUGEINT), like eigenvector_centrality and katz.
+HUGEINT).
 
 Algorithm: power iteration on M = cI − L with c = 2·dmax ≥ λmax, so M
 is PSD and its dominant non-constant eigendirection is the Fiedler

@@ -13,7 +13,12 @@ Every k-th superstep (``SuperstepHarness.interval``) persists the
 iteration state to parquet together with per-partition lineage rows
 (superstep, partition_id, rows, wall_s, changed, delta, ts), so a
 killed run restarts from the latest complete superstep, and the
-lineage table doubles as the metrics/convergence log.
+lineage table doubles as the metrics/convergence log. Lineage rows
+exist only for the checkpointed steps, every ``interval``-th: a
+step in between observes its ``changed`` / ``delta`` but writes no
+row, so PageRank's per-step convergence record (the lineage
+``delta``) is complete only at ``interval=1``. An every-step record
+without a harness is ROADMAP direction 4.
 
 Layout under ``root``::
 

@@ -98,65 +98,6 @@ def clustering_coefficient(
     )
 
 
-def ktruss(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 100,
-) -> DataFrame:
-    """Edges of the k-truss: the maximal subgraph in which every edge
-    participates in at least k-2 triangles (Cohen 2008) — the standard
-    cohesive-subgraph relaxation of cliques, one notch stronger than
-    k-core.
-
-    Iterative peel: per round, count each surviving edge's triangle
-    support (the same degree-ordered two-join enumeration as
-    :func:`triangles`, so wedge fan-out stays O(sqrt(m)) per vertex)
-    and drop under-supported edges; repeat until a fixpoint.  Rounds
-    are bounded by the peel depth (≤ initial max support), each
-    round's survivor set is ``localCheckpoint``-ed, and the only
-    driver-side value per round is the survivor count (which doubles
-    as the convergence signal).  Raises if ``max_rounds`` is exhausted
-    before the fixpoint, never returns a partial peel.
-
-    Returns the surviving canonical edge list ``(a, b)`` with a < b.
-    """
-    if k < 3:
-        raise ValueError("ktruss requires k >= 3 (k-2 >= 1 triangle per edge)")
-    es = (
-        edges.select(
-            F.least(F.col(src).cast("long"), F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = es.count()
-    for _ in range(max_rounds):
-        tri = triangles(es, "a", "b")
-        sup = (
-            tri.select(F.col("x").alias("u"), F.col("y").alias("w"))
-            .unionByName(tri.select(F.col("x").alias("u"), F.col("z").alias("w")))
-            .unionByName(tri.select(F.col("y").alias("u"), F.col("z").alias("w")))
-            .select(F.least("u", "w").alias("a"), F.greatest("u", "w").alias("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("sup"))
-        )
-        keep = (
-            es.join(sup, ["a", "b"])
-            .filter(F.col("sup") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        m = keep.count()
-        if m == n:
-            return keep
-        es, n = keep, m
-    raise RuntimeError(f"ktruss did not reach a fixpoint in {max_rounds} rounds")
-
-
 def triangles_per_vertex(
     edges: DataFrame, src: str = "src", dst: str = "dst", vertices: DataFrame | None = None
 ) -> DataFrame:

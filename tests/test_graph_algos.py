@@ -246,103 +246,6 @@ def test_host_graph_contraction(spark):
     }
 
 
-def _py_ktruss(edges, k):
-    es = {(min(a, b), max(a, b)) for a, b in edges if a != b}
-    while True:
-        adj: dict[int, set[int]] = {}
-        for a, b in es:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        sup = {
-            e: len(adj[e[0]] & adj[e[1]]) for e in es
-        }
-        keep = {e for e in es if sup[e] >= k - 2}
-        if keep == es:
-            return es
-        es = keep
-
-
-def test_ktruss_two_triangles_and_tail(spark):
-    from ccl_spark.triangles import ktruss
-
-    # two triangles sharing edge (1,2), plus a pendant path 4-5-6
-    edges = [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (4, 5), (5, 6), (2, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r["a"], r["b"]) for r in ktruss(df, k=3).collect()}
-    assert got == _py_ktruss(edges, 3)
-    assert got == {(0, 1), (0, 2), (1, 2), (1, 3), (2, 3)}
-    # k=4: every edge needs 2 triangles; only the shared edge has 2,
-    # but its triangles die with their other edges -> empty fixpoint
-    assert ktruss(df, k=4).count() == 0
-
-
-def test_ktruss_k4_clique(spark):
-    from itertools import combinations
-
-    from ccl_spark.triangles import ktruss
-
-    # K5 survives k=4 (each edge in 3 triangles) plus a dangling wedge
-    edges = list(combinations(range(5), 2)) + [(5, 6), (6, 7), (5, 7), (0, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r["a"], r["b"]) for r in ktruss(df, k=4).collect()}
-    assert got == _py_ktruss(edges, 4)
-    assert got == set(combinations(range(5), 2))
-    # the hanging triangle survives k=3 along with everything else
-    got3 = {(r["a"], r["b"]) for r in ktruss(df, k=3).collect()}
-    assert got3 == _py_ktruss(edges, 3)
-    assert {(5, 6), (6, 7), (5, 7)} <= got3 and (0, 5) not in got3
-
-
-def test_ktruss_matches_python_peel_random(spark):
-    import random
-
-    from ccl_spark.triangles import ktruss
-
-    rng = random.Random(17)
-    edges = [(rng.randrange(25), rng.randrange(25)) for _ in range(120)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    for k in (3, 4):
-        got = {(r["a"], r["b"]) for r in ktruss(df, k=k).collect()}
-        assert got == _py_ktruss(edges, k)
-
-
-def test_ktruss_rejects_small_k(spark):
-    from ccl_spark.triangles import ktruss
-
-    df = spark.createDataFrame([(0, 1)], "src long, dst long")
-    with pytest.raises(ValueError):
-        ktruss(df, k=2)
-
-
-def test_katz_exact_small(spark):
-    from ccl_spark.pagerank import katz_centrality
-
-    # star 1->0, 2->0, 3->0 plus 0->1: hand-computed truncated Katz
-    edges = spark.createDataFrame(
-        [(1, 0), (2, 0), (3, 0), (0, 1)], "src long, dst long"
-    )
-    a = 1.0 / 16
-    # closed-form for 2 rounds: x2(v) = 1 + a*indeg + a^2*(walks of len 2)
-    got = {r.vertex: r.katz for r in katz_centrality(edges, n_iter=2, k=10).collect()}
-    exp = {
-        0: 1 + 3 * a + a * a,          # len-2 walks into 0: 0->1->0
-        1: 1 + a + 3 * a * a,          # 1->0->1? no: walks ending at 1: x->0->1 for x in {1,2,3}
-        2: 1.0,
-        3: 1.0,
-    }
-    assert got == {v: round(x, 6) for v, x in exp.items()}
-
-
-def test_katz_rejects_non_dyadic_alpha(spark):
-    import pytest as _pytest
-
-    from ccl_spark.pagerank import katz_centrality
-
-    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
-    with _pytest.raises(ValueError):
-        katz_centrality(edges, alpha=0.1)
-
-
 def test_pivot_eccentricity_path(spark):
     from ccl_spark.betweenness import pivot_eccentricity
 
@@ -352,60 +255,6 @@ def test_pivot_eccentricity_path(spark):
     )
     got = {r.p: r.ecc for r in pivot_eccentricity(edges, n_pivots=2, max_depth=8).collect()}
     assert got == {1: 3, 2: 2}
-
-
-def test_label_spreading_seeds_fixed_and_frontier(spark):
-    from ccl_spark.lpa import label_spreading
-
-    # path 0-1-2-3-4 with seeds 0->label 7 and 4->label 9: after 1
-    # round only neighbors are labeled; seeds never change; the middle
-    # vertex 2 sees both frontiers at round 2 and takes the SMALLER
-    # label on the tie (7)
-    e = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 4)], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(0, 7), (4, 9)], "vertex long, label long")
-    r1 = {r.vertex: r.label for r in label_spreading(e, seeds, n_iter=1).collect()}
-    assert r1 == {0: 7, 4: 9, 1: 7, 3: 9}
-    r2 = {r.vertex: r.label for r in label_spreading(e, seeds, n_iter=2).collect()}
-    assert r2 == {0: 7, 4: 9, 1: 7, 3: 9, 2: 7}
-    # majority beats tie-break: two label-9 neighbors outvote one 7
-    e2 = spark.createDataFrame(
-        [(10, 0), (10, 4), (10, 5)], "src long, dst long"
-    )
-    seeds2 = spark.createDataFrame(
-        [(0, 7), (4, 9), (5, 9)], "vertex long, label long"
-    )
-    g = {r.vertex: r.label for r in label_spreading(e2, seeds2, n_iter=1).collect()}
-    assert g[10] == 9
-
-
-def test_ppr_batch_matches_single_seed_pagerank(spark):
-    from ccl_spark.pagerank import pagerank, ppr_batch
-
-    e = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (5, 0)], "src long, dst long"
-    )
-    batch = ppr_batch(e, seeds=[0, 3], n_iter=6, k=4)
-    got = {
-        s: {(r.vertex, r.rank) for r in batch.filter(batch.seed == s).collect()}
-        for s in (0, 3)
-    }
-    from pyspark.sql import functions as SF
-
-    for s in (0, 3):
-        # ppr_batch state is sparse (only reached vertices); the dense
-        # single-seed ranking pads top-k with exact-0 rows — compare
-        # the positive-mass rows
-        single = (
-            pagerank(e, tol=0.0, max_iter=6, seeds=[s])
-            .filter(SF.col("rank") > 0)
-            .select("vertex", SF.round("rank", 6).alias("rank"))
-            .orderBy(SF.desc("rank"), SF.asc("vertex"))
-            .limit(4)
-        )
-        exp = {(r.vertex, r.rank) for r in single.collect()}
-        assert got[s] == exp, (s, got[s], exp)
 
 
 def test_spam_mass_link_farm(spark):
@@ -465,47 +314,6 @@ def test_spam_mass_link_farm(spark):
         assert sm == pytest.approx(
             (pr_np[idx[v]] - tr_np[idx[v]]) / pr_np[idx[v]], abs=2e-6
         )
-
-
-def test_eigenvector_centrality_vs_numpy(spark):
-    import random
-
-    import numpy as np
-
-    from ccl_spark.pagerank import eigenvector_centrality
-
-    rng = random.Random(13)
-    n = 25
-    edges = [
-        (a, b) for a in range(n) for b in range(n) if a != b and rng.random() < 0.15
-    ]
-    A = np.zeros((n, n), dtype=np.int64)
-    for a, b in edges:
-        A[a, b] = 1
-    x = np.ones(n, dtype=np.int64)
-    for _ in range(4):
-        x = A.T @ x
-    exp_score = np.round(x / max(x.max(), 1), 6)
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = eigenvector_centrality(df, n_iter=4, k=n).collect()
-    for r in got:
-        assert r["walks"] == int(x[r["vertex"]])
-        assert abs(r["score"] - float(exp_score[r["vertex"]])) < 1e-12
-    # ordering: score desc then vertex asc
-    keys = [(-r["score"], r["vertex"]) for r in got]
-    assert keys == sorted(keys)
-
-
-def test_eigenvector_centrality_star(spark):
-    # hub receiving from 4 spokes: after k steps all walk mass is on
-    # the hub (spokes have no in-edges)
-    from ccl_spark.pagerank import eigenvector_centrality
-
-    e = spark.createDataFrame([(i, 99) for i in range(1, 5)], "src long, dst long")
-    rows = eigenvector_centrality(e, n_iter=1, k=10).collect()
-    by_v = {r["vertex"]: r for r in rows}
-    assert by_v[99]["walks"] == 4 and by_v[99]["score"] == 1.0
-    assert all(by_v[v]["walks"] == 0 for v in range(1, 5))
 
 
 def _dumbbell_cliques(half: int):

@@ -114,3 +114,40 @@ def test_keep_modules_import_no_later_slice_module():
         if dep in later
     ]
     assert not bad, bad
+
+
+_LOOP_ACTIONS = {"localCheckpoint", "checkpoint", "collect", "first"}
+
+
+def _loop_actions(path: Path) -> list[str]:
+    """``line: call`` for every Spark action called inside a ``for`` /
+    ``while`` body of ``path``. A ``.count()`` counts only with no
+    arguments, so an aggregate's ``F.count(...)`` is not one."""
+    found = []
+    for loop in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(loop, (ast.For, ast.While)):
+            continue
+        for stmt in loop.body:
+            for n in ast.walk(stmt):
+                if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                    continue
+                name = n.func.attr
+                if name in _LOOP_ACTIONS or (
+                    name == "count" and not n.args and not n.keywords
+                ):
+                    found.append(f"{n.lineno}: {name}")
+    return found
+
+
+def test_keep_modules_loop_only_in_superstep():
+    """Every iteration of a keep module runs through
+    ``superstep.run_supersteps``, which owns the per-step checkpoint,
+    signature and lineage; a Spark action inside a loop anywhere else
+    is a private copy of that loop."""
+    bad = [
+        f"{mod}.py:{hit}"
+        for mod, mark in sorted(_marks().items())
+        if mark == "keep" and mod != "superstep"
+        for hit in _loop_actions(PKG / f"{mod}.py")
+    ]
+    assert not bad, bad

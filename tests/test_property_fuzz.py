@@ -107,18 +107,6 @@ def test_asof_join_matches_brute_force(spark, left, right):
 
 
 @FUZZ
-@given(edges=edges_strategy, k=st.integers(3, 5))
-def test_ktruss_matches_python_peel(spark, edges, k):
-    from ccl_spark.triangles import ktruss
-
-    from tests.test_graph_algos import _py_ktruss
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r["a"], r["b"]) for r in ktruss(df, k=k).collect()}
-    assert got == _py_ktruss(edges, k)
-
-
-@FUZZ
 @given(edges=edges_strategy)
 def test_mis_matches_python_luby(spark, edges):
     from ccl_spark.mis import maximal_independent_set

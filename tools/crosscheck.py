@@ -50,21 +50,21 @@ def main() -> int:
         dt = time.monotonic() - t0
         sql = oracles.get(name)
         if sql is None:
-            print(f"{name:20s} rows-only: {len(sdf)} rows [{dt:6.2f}s]")
+            print(f"{name:20s} rows-only: {len(sdf)} rows [{dt:6.2f}s]", flush=True)
             continue
         try:
             ddf = con.execute(sql).df()
         except Exception as exc:  # noqa: BLE001
-            print(f"{name:20s} ORACLE SQL ERROR: {exc}")
+            print(f"{name:20s} ORACLE SQL ERROR: {exc}", flush=True)
             failures += 1
             continue
         a, b = canon(sdf), canon(ddf)
         if list(a.columns) != list(b.columns):
-            print(f"{name:20s} COLUMN MISMATCH spark={list(a.columns)} duck={list(b.columns)}")
+            print(f"{name:20s} COLUMN MISMATCH spark={list(a.columns)} duck={list(b.columns)}", flush=True)
             failures += 1
             continue
         if len(a) != len(b):
-            print(f"{name:20s} ROWCOUNT MISMATCH spark={len(a)} duck={len(b)}")
+            print(f"{name:20s} ROWCOUNT MISMATCH spark={len(a)} duck={len(b)}", flush=True)
             failures += 1
             continue
         try:
@@ -72,11 +72,11 @@ def main() -> int:
             # long-vs-double divergence (e.g. DuckDB HUGEINT sums) must fail
             # here too, not be masked.
             pd.testing.assert_frame_equal(a, b, check_dtype=True, check_exact=False, rtol=0, atol=1e-9)
-            print(f"{name:20s} OK ({len(a)} rows) [{dt:6.2f}s]")
+            print(f"{name:20s} OK ({len(a)} rows) [{dt:6.2f}s]", flush=True)
         except AssertionError as exc:
-            print(f"{name:20s} VALUE MISMATCH: {str(exc)[:300]}")
+            print(f"{name:20s} VALUE MISMATCH: {str(exc)[:300]}", flush=True)
             failures += 1
-    print("FAILURES:", failures)
+    print("FAILURES:", failures, flush=True)
     return 1 if failures else 0
 
 
